@@ -25,7 +25,8 @@ WORKDIR /opt/app
 COPY target/scala-2.13/graft_2.13-*.jar /opt/app/graft.jar
 
 # local[*] inside the container mirrors the reference's single-process
-# run; override SPARK_GRAFT_MASTER (or submit the jar yourself) to fan
-# out on a real cluster.
+# run. To fan out on a real cluster, submit the jar yourself with
+# `--master <cluster>`: the CMD's `--master` sets spark.master, so
+# SPARK_GRAFT_MASTER (read only when spark.master is unset) has no effect.
 CMD ["/opt/spark/bin/spark-submit", "--class", "graft.Main", \
      "--master", "local[*]", "/opt/app/graft.jar"]

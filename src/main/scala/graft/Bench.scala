@@ -263,45 +263,8 @@ object Bench {
     "q_snapshot_diff" -> 0.613) // q_scd2_lifecycle's 1.812 builder floor retired: the r15-opt refMin (1.494) is now below it, so the gate itself is the stricter check
 
   def main(args: Array[String]): Unit = {
-    // Temp streaming checkpoints (and any other JVM temp files) on
-    // tmpfs: a CONF-level checkpointLocation disables Spark's
-    // temp-checkpoint fast path (measured +2.4 s per stateful-agg
-    // lifecycle call), so relocate java.io.tmpdir instead — temp
-    // semantics (auto-delete on stop) preserved, stalling disk avoided.
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft-tmp"); t.mkdirs()
-      System.setProperty("java.io.tmpdir", t.getPath)
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/checkpoint spill to tmpfs when available: this host's
-      // virtual disk has erratic latency that dominates shuffle-heavy
-      // query variance; RAM-backed local dirs are the single-node analog
-      // of proper local SSDs on executors
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      // The persisted-index warehouse rides tmpfs too (override with
-      // SPARK_GRAFT_WAREHOUSE): the 17 rebuild-by-design lifecycle keys
-      // write several epoch+sidecar tables per call, and on this host
-      // those saveAsTable writes — not the compute — are where the
-      // documented multi-second disk stalls land (r13: 70-80 s of every
-      // full pass was the lifecycle family, swinging 3-6x run-to-run).
-      // A full-pass warehouse is ~300 MB against a 126 GB tmpfs. On a
-      // real cluster this is object-store/HDFS bandwidth, not a local
-      // disk's pathology.
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-warehouse"
-          else new java.io.File("spark-warehouse").getAbsolutePath))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Untimed warmup: JVM/codegen/classloader + parquet footer reads land
     // here instead of inside whichever query happens to run first.
     try {

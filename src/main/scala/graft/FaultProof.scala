@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Materialize
@@ -34,29 +33,16 @@ object FaultProof {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("reliable")
     require(mode == "reliable" || mode == "local", s"unknown mode $mode")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val jars = sys.env.getOrElse("SPARK_GRAFT_JARS",
-      sys.error("SPARK_GRAFT_JARS must point at the sbt-packaged jar"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,4096]"))
-      .config("spark.jars", jars)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // one task attempt re-tries are fine; the point is job-level outcome
-      .getOrCreate()
+    require(sys.env.contains("SPARK_GRAFT_JARS"),
+      "SPARK_GRAFT_JARS must point at the sbt-packaged jar")
+    // the negative control needs localCheckpoint, i.e. no checkpoint dir
+    require(mode == "reliable" || !sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR"),
+      "local mode must run without SPARK_GRAFT_CHECKPOINT_DIR")
+    val spark = GraftSession(Some("local-cluster[2,4,4096]"))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.sparkContext.setLogLevel("ERROR")
-    if (mode == "reliable")
-      spark.sparkContext.setCheckpointDir(
-        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/dev/shm/graft-faultproof"))
+    if (mode == "reliable" && spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir("/dev/shm/graft-faultproof")
 
     import spark.implicits._
     val n = 4000000L
@@ -69,9 +55,11 @@ object FaultProof {
 
     // kill one executor JVM — a real SIGKILL to a separate process,
     // between jobs, so the loss is of MATERIALIZED state, not a task
-    val me = ProcessHandle.current().pid()
-    val victims = ProcessHandle.allProcesses().filter { p =>
-      p.pid() != me && p.info().commandLine()
+    // local-cluster workers fork their executors from this JVM, so only
+    // its descendants are candidates (a shell whose command line merely
+    // mentions the executor class must never be the victim)
+    val victims = ProcessHandle.current().descendants().filter { p =>
+      p.info().commandLine()
         .map[Boolean](_.contains("CoarseGrainedExecutorBackend"))
         .orElse(false)
     }.toList

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{
   *   spark-submit --class graft.Main <jar>        # cluster
-  *   sbt "runMain graft.Main"                     # local[*]
+  *   sbt "runMain graft.Main"                     # local[nproc]
   * }}}
   *
   * Env contract (names verbatim from main.py:15-21):
@@ -91,11 +91,8 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().appName("graft-zylyty")
-    // spark-submit supplies the master on a cluster; default local[*]
-    if (!sys.props.contains("spark.master")) b.master(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-    val spark = b.getOrCreate()
+    // spark-submit supplies the master on a cluster; default local[cpus]
+    val spark = GraftSession.builder().appName("graft-zylyty").getOrCreate()
     try run(spark, sys.env.get)
     finally spark.stop()
   }

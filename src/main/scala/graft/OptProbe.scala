@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Optimization-round measurement harness: runs named queries under the
@@ -16,29 +15,10 @@ import scala.collection.mutable
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft-tmp"); t.mkdirs()
-      System.setProperty("java.io.tmpdir", t.getPath)
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val repeats = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-warehouse"
-          else new java.io.File("spark-warehouse").getAbsolutePath))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class J(id: Int, t0: Long, t1: Long, site: String, stages: Int,
       stageNames: Seq[String])

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: dumps `explain("formatted")` for the headline
   * queries so scan pruning / pushdown / join strategy / codegen spans
   * can be reviewed per round (output checked into PLANS.md).
@@ -20,13 +18,7 @@ object Plans {
     val names = if (args.length > 1) args(1).split(",").toSeq
       else Seq("q_client_txn_counts", "q_monthly_summary", "q_dedup_first",
         "q_ngram_jaccard", "q_knn_cosine", "q_event_windows")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

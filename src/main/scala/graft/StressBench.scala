@@ -206,38 +206,11 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Temp streaming checkpoints (and any other JVM temp files) on
-    // tmpfs: a CONF-level checkpointLocation disables Spark's
-    // temp-checkpoint fast path (measured +2.4 s per stateful-agg
-    // lifecycle call), so relocate java.io.tmpdir instead — temp
-    // semantics (auto-delete on stop) preserved, stalling disk avoided.
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft-tmp"); t.mkdirs()
-      System.setProperty("java.io.tmpdir", t.getPath)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIR",
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-stress10x"
       else "/tmp/graft-stress10x")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      // same tmpfs routing as Bench/Verify (r14): lifecycle epoch
-      // writes, staged arrivals, and stream checkpoints off the
-      // stalling disk (via the java.io.tmpdir override in main)
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-warehouse"
-          else new java.io.File("spark-warehouse").getAbsolutePath))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val t0 = System.nanoTime()
     tenX(spark, src, dst)

@@ -1,73 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Temp streaming checkpoints (and any other JVM temp files) on
-    // tmpfs: a CONF-level checkpointLocation disables Spark's
-    // temp-checkpoint fast path (measured +2.4 s per stateful-agg
-    // lifecycle call), so relocate java.io.tmpdir instead — temp
-    // semantics (auto-delete on stop) preserved, stalling disk avoided.
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft-tmp"); t.mkdirs()
-      System.setProperty("java.io.tmpdir", t.getPath)
-    }
     val sfDir = args(0); val outDir = args(1)
     // optional third arg: comma-separated key filter (dev iteration only —
     // the driver always runs the full surface with two args)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Cluster-realism overrides (the fault-tolerance proof run):
-    //   SPARK_GRAFT_MASTER=local-cluster[2,4,4096] — real separate-JVM
-    //     executors, real task/closure serialization, real block manager
-    //     boundaries (requires SPARK_HOME + SPARK_SCALA_VERSION=2.13 in
-    //     the env and SPARK_GRAFT_JARS pointing at the sbt-packaged jar
-    //     so executors can load graft classes).
-    //   SPARK_GRAFT_CHECKPOINT_DIR=<dir> — sets a RELIABLE checkpoint
-    //     dir, flipping every Materialize.corpus site from
-    //     localCheckpoint to persist+checkpoint (the cluster-safe path).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) parquet — read as long, converted
-      // to µs TimestampType in Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // RAM-backed shuffle dirs — this host's virtual disk stalls (see
-      // BASELINE.md measurement caveat)
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else
-          System.getProperty("java.io.tmpdir"))
-      // persisted-index warehouse on tmpfs too (see Bench.scala: the
-      // lifecycle keys' epoch writes are where this host's disk stalls
-      // land; a full-surface warehouse is ~300 MB)
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-warehouse"
-          else new java.io.File("spark-warehouse").getAbsolutePath))
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
-    if (master.startsWith("local-cluster")) {
-      // executor JVMs need the same JDK17 --add-opens set the driver
-      // gets from build.sbt (spark-submit would inject these)
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-      b.config("spark.executor.extraJavaOptions", addOpens)
-    }
-    val spark = b.getOrCreate()
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -506,9 +506,9 @@ object Layout {
     * rewrites the WHOLE table through a side table: O(table) IO per
     * maintenance call even when one day's appends touched three buckets.
     * This variant rewrites ONLY buckets whose file count exceeds
-    * `maxFilesPerBucket`, each as its own small job, `parallelism` at a
-    * time — IO is O(overfull buckets), and buckets already compact keep
-    * their exact files (spec-asserted by file listing).
+    * `maxFilesPerBucket`, each as its own small job through
+    * [[inParallel]] — IO is O(overfull buckets), and buckets already
+    * compact keep their exact files (spec-asserted by file listing).
     *
     * Mechanics: a bucket's rows are read from its own files, sorted by
     * `key` (restoring the one-file-per-bucket sorted layout the writer
@@ -531,7 +531,7 @@ object Layout {
     * with compaction (single-writer, like the append path itself).
     */
   def compactBuckets(spark: SparkSession, table: String, key: String,
-      maxFilesPerBucket: Int = 1, parallelism: Int = 8): Unit = {
+      maxFilesPerBucket: Int = 1): Unit = {
     val loc = tableLocation(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(loc, ".compact")
@@ -573,37 +573,31 @@ object Layout {
     if (overfull.isEmpty) return
     fs.mkdirs(staging)
 
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, overfull.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    // inParallel settles every bucket job before rethrowing, so the
+    // finally below never replays or deletes `.compact/` under a sibling
+    // job that is still writing into it
     try {
-      val jobs = overfull.toSeq.map { case (b, fls) =>
-        Future {
-          // one tiny job per bucket: its files → one sorted file
-          val df = spark.read.parquet(fls.map(_.getPath.toString): _*)
-          val jobDir = new org.apache.hadoop.fs.Path(staging, s"job_$b")
-          df.coalesce(1).sortWithinPartitions(col(key))
-            .write.mode("overwrite").parquet(jobDir.toString)
-          val part = fs.listStatus(jobDir).toSeq
-            .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
-            .getOrElse(sys.error(s"no output file for bucket $b of $table"))
-          // stage DURABLY under the bucket-id name Spark's scan parses;
-          // unique per run so a re-compaction never collides with the
-          // file an earlier compaction installed
-          val staged = new org.apache.hadoop.fs.Path(staging,
-            f"compact-${java.util.UUID.randomUUID}%s_$b%05d.c000.snappy.parquet")
-          fs.rename(part.getPath, staged)
-          fs.delete(jobDir, true)
-          // swap: delete old files, then move the staged file live
-          fls.foreach(f => fs.delete(f.getPath, false))
-          fs.rename(staged, new org.apache.hadoop.fs.Path(loc, staged.getName))
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf)
+      inParallel(overfull.toSeq.map[() => Unit] { case (b, fls) => () => {
+        // one tiny job per bucket: its files → one sorted file
+        val df = spark.read.parquet(fls.map(_.getPath.toString): _*)
+        val jobDir = new org.apache.hadoop.fs.Path(staging, s"job_$b")
+        df.coalesce(1).sortWithinPartitions(col(key))
+          .write.mode("overwrite").parquet(jobDir.toString)
+        val part = fs.listStatus(jobDir).toSeq
+          .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
+          .getOrElse(sys.error(s"no output file for bucket $b of $table"))
+        // stage DURABLY under the bucket-id name Spark's scan parses;
+        // unique per run so a re-compaction never collides with the
+        // file an earlier compaction installed
+        val staged = new org.apache.hadoop.fs.Path(staging,
+          f"compact-${java.util.UUID.randomUUID}%s_$b%05d.c000.snappy.parquet")
+        fs.rename(part.getPath, staged)
+        fs.delete(jobDir, true)
+        // swap: delete old files, then move the staged file live
+        fls.foreach(f => fs.delete(f.getPath, false))
+        fs.rename(staged, new org.apache.hadoop.fs.Path(loc, staged.getName))
+      }}: _*)
     } finally {
-      pool.shutdown()
       replayStaging() // no-op on success; completes any mid-swap bucket
       fs.delete(staging, true)
       spark.sql(s"REFRESH TABLE $table")

@@ -1356,12 +1356,6 @@ object SimilarityOps {
     * coarse cells (the Faiss IVFADC convention — books quantize
     * residuals, so they are seeded from residuals).
     */
-  private[graft] def writeIvfPqCodebooks(spark: SparkSession, sfDir: String,
-      name: String): Unit =
-    writeIvfPqCodebooksFrom(spark,
-      Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")),
-      name)
-
   private[graft] def writeIvfPqCodebooksFrom(spark: SparkSession,
       corpus: DataFrame, name: String): Unit = {
     val (k, nc) = (PqCentroids, IvfPqCells)

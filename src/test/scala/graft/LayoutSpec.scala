@@ -170,6 +170,18 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("inParallel: a failing unit rethrows only after every sibling has settled") {
+    val boom = new IllegalStateException("boom")
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Layout.inParallel(
+        () => throw boom,
+        () => { Thread.sleep(1000); siblingDone.set(true) })
+    }
+    assert(e eq boom)
+    assert(siblingDone.get, "inParallel rethrew while a sibling was still running")
+  }
+
   test("compactBuckets: rewrites only overfull buckets; content, pinning, recovery intact") {
     val s = spark; import s.implicits._
     val name = "graft_compact_spec"
