@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
-import graft.operators.Cleaning
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+
+import graft.operators.{Cleaning, Materialize}
 import graft.sources._
 
 /** The reference's end-to-end batch pipeline (SURVEY.md §3 EP1,
@@ -20,6 +23,8 @@ import graft.sources._
   *    row order, which no distributed engine preserves — SURVEY.md §7);
   *  - the Postgres load becomes `saveTables` (parquet or JDBC via
   *    [[graft.sources.JdbcSink]]) — views run on the engine itself;
+  *  - the tables are landed once (`Materialize.corpus`) before the views
+  *    read them, as the reference loads Postgres before `CREATE VIEW`;
   *  - ingest failures degrade to typed EMPTY relations (S4) and the
   *    pipeline still completes, like the reference.
   */
@@ -31,84 +36,76 @@ object Pipeline {
       s"ZYLYTY Data Import Completed [$clients, $accounts, $transactions]"
   }
 
-  /** Ingest + clean + register temp views (`accounts`, `clients`,
+  /** Ingest + clean + land + register temp views (`accounts`, `clients`,
     * `transactions` + the three analytics views). Returns the counts.
     */
   def run(spark: SparkSession, baseUrl: String, token: Option[String],
           limit: Int = 1000, maxPages: Int = 300,
-          retrySleepMillis: Long = 2000): Result = {
-    val fetch = new HttpFetch(bearerToken = token)
-    val accounts = CsvHttpSource.readOrEmpty(
-      spark, s"$baseUrl/download/accounts.csv", RefSchemas.accounts, fetch)
-    val clients = CsvHttpSource.readOrEmpty(
-      spark, s"$baseUrl/download/clients.csv", RefSchemas.clients, fetch)
-    val rawTx = scala.util.Try(
-      PaginatedJsonSource.read(spark, s"$baseUrl/transactions", fetch,
-        limit = limit, maxPages = maxPages, retrySleepMillis = retrySleepMillis))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq())))
-    val transactions = cleanTransactions(spark, rawTx)
-
-    accounts.createOrReplaceTempView("accounts")
-    clients.createOrReplaceTempView("clients")
-    transactions.createOrReplaceTempView("transactions")
-    createViews(spark)
-
-    Result(clients.count(), accounts.count(), transactions.count())
-  }
+          retrySleepMillis: Long = 2000): Result =
+    load(spark, baseUrl, token) { fetch =>
+      val url = s"$baseUrl/transactions"
+      try PaginatedJsonSource.read(spark, url, fetch, limit = limit,
+        maxPages = maxPages, retrySleepMillis = retrySleepMillis)
+      catch { case NonFatal(e) => // S4, logged like CsvHttpSource.readOrEmpty
+        System.err.println(s"[graft] transactions ingest failed for $url: ${e.getMessage}")
+        spark.emptyDataFrame
+      }
+    }
 
   /** Scale variant of [[run]]: transactions ingest goes through the
     * DataSourceV2 paginated-HTTP connector — executors fetch page
     * ranges in parallel and `from_json` applies the pinned schema
     * declaratively — instead of the driver-side loop. Same cleaning,
-    * views, and completion line.
+    * landing, views, and completion line.
     */
   def runWithConnector(spark: SparkSession, baseUrl: String, token: Option[String],
-                       limit: Int = 1000, maxPages: Int = 300): Result = {
+                       limit: Int = 1000, maxPages: Int = 300): Result =
+    load(spark, baseUrl, token) { _ =>
+      val reader = spark.read
+        .format("graft.sources.v2.PaginatedHttpTableProvider")
+        .option("url", s"$baseUrl/transactions")
+        .option("pages", maxPages + 1)
+        .option("limit", limit)
+      val raw = token.foldLeft(reader)((r, t) => r.option("token", t)).load()
+      // pinned-schema declarative parse of the connector's raw JSON rows
+      val txSchema = StructType(
+        RefSchemas.transactions.fields.map(_.copy(dataType = StringType)))
+      raw.select(col("arrival_idx"), from_json(col("raw"), txSchema).as("r"))
+        .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames
+          .map(n => col(s"r.$n").as(n)): _*)
+        // materialize ONE fetch pass: no later action may re-issue the HTTP
+        // page fetches (a live endpoint could change between actions).
+        // Deliberately LOCAL, never Materialize.corpus: recompute-on-loss
+        // would re-fetch a non-idempotent HTTP source, which is worse than
+        // failing — a cluster deployment replays from durable storage: the
+        // landing in cleanTransactions, reliable with a checkpoint dir.
+        .localCheckpoint()
+    }
+
+  /** Both flows' body: each table is landed once, so the counts, views
+    * and sink read landed rows instead of re-running ingest and dedup. */
+  private def load(spark: SparkSession, baseUrl: String, token: Option[String])(
+      readTransactions: HttpFetch => DataFrame): Result = {
     val fetch = new HttpFetch(bearerToken = token)
-    val accounts = CsvHttpSource.readOrEmpty(
-      spark, s"$baseUrl/download/accounts.csv", RefSchemas.accounts, fetch)
-    val clients = CsvHttpSource.readOrEmpty(
-      spark, s"$baseUrl/download/clients.csv", RefSchemas.clients, fetch)
-    val reader = spark.read
-      .format("graft.sources.v2.PaginatedHttpTableProvider")
-      .option("url", s"$baseUrl/transactions")
-      .option("pages", maxPages + 1)
-      .option("limit", limit)
-    val raw = token.foldLeft(reader)((r, t) => r.option("token", t)).load()
-    // pinned-schema declarative parse of the connector's raw JSON rows
-    val txSchema = org.apache.spark.sql.types.StructType(
-      RefSchemas.transactions.fields.map(f =>
-        f.copy(dataType = org.apache.spark.sql.types.StringType)))
-    val parsed = raw.select(col("arrival_idx"),
-        from_json(col("raw"), txSchema).as("r"))
-      .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames
-        .map(n => col(s"r.$n").as(n)): _*)
-      // materialize ONE fetch pass: isEmpty, the counts, and every later
-      // view query would otherwise re-issue all HTTP page fetches (and a
-      // live endpoint could change between actions). Deliberately LOCAL,
-      // never Materialize.corpus: recompute-on-loss would re-fetch a
-      // non-idempotent HTTP source, which is worse than failing — a
-      // cluster deployment lands ingest to durable storage first (the
-      // typed table load below IS that landing) and replays from there.
-      .localCheckpoint()
-    val transactions = cleanTransactions(spark, parsed)
-    accounts.createOrReplaceTempView("accounts")
-    clients.createOrReplaceTempView("clients")
-    transactions.createOrReplaceTempView("transactions")
+    def csv(name: String, schema: StructType) = Materialize.corpus(
+      CsvHttpSource.readOrEmpty(spark, s"$baseUrl/download/$name.csv", schema, fetch))
+    val accounts = csv("accounts", RefSchemas.accounts)
+    val clients = csv("clients", RefSchemas.clients)
+    val transactions = cleanTransactions(spark, readTransactions(fetch))
+    Seq("accounts" -> accounts, "clients" -> clients, "transactions" -> transactions)
+      .foreach { case (name, df) => df.createOrReplaceTempView(name) }
     createViews(spark)
     Result(clients.count(), accounts.count(), transactions.count())
   }
 
   /** clean_transactions_data (main.py:121-126): typed projection,
     * first-wins dedup on (timestamp, account_id) by arrival order,
-    * amount coerce-else-zero. Empty/short inputs pass through (T4).
+    * amount coerce-else-zero, landed through `Materialize.corpus`. A
+    * schema-less input (no element, or failed ingest) is the empty table (T4).
     */
   def cleanTransactions(spark: SparkSession, raw: DataFrame): DataFrame = {
-    if (raw.schema.isEmpty || raw.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], RefSchemas.transactions)
+    if (raw.schema.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], RefSchemas.transactions)
     val typed = raw.select(
       col("arrival_idx"),
       col("transaction_id").cast("long"),
@@ -117,8 +114,9 @@ object Pipeline {
       Cleaning.coerceDecimalElseZero(col("amount")).as("amount"),
       col("type").cast("string"),
       col("medium").cast("string"))
-    Cleaning.dedupFirstKeepFirst(typed, Seq("timestamp", "account_id"), "arrival_idx")
-      .drop("arrival_idx")
+    Materialize.corpus(
+      Cleaning.dedupFirstKeepFirst(typed, Seq("timestamp", "account_id"), "arrival_idx")
+        .drop("arrival_idx"))
   }
 
   /** create_views (main.py:175-223): the three analytics views as

@@ -2262,6 +2262,9 @@ object GovernanceOps {
   /** How many epochs the VACUUM key writes before retention runs. */
   private[graft] val VacEpochs = 4
 
+  /** `o_orderpriority`'s domain: TPC-H has five order priorities. */
+  private[graft] val OrderPriorities = 5
+
   /** VACUUM / RETENTION under the oracle — the destructive half of the
     * table service ([[zonemapOptimize]] rewrites, [[timeTravel]] reads
     * history, this key BOUNDS history): [[Layout.pruneEpochs]] ran
@@ -2301,8 +2304,13 @@ object GovernanceOps {
       Seq(count(when(keep, lit(1))).as(s"n_$i"),
         sum(when(keep, col("cents"))).as(s"c_$i"))
     }
+    // one driver row per prio: collect at most one past the domain, and
+    // fail on it instead of pulling an unbounded aggregate to the driver
     val verRows = o.groupBy(col("prio"))
-      .agg(verCols.head, verCols.tail: _*).collect()
+      .agg(verCols.head, verCols.tail: _*).limit(OrderPriorities + 1).collect()
+    if (verRows.length > OrderPriorities)
+      throw new IllegalStateException(
+        s"q_vacuum: more than $OrderPriorities o_orderpriority values in $sfDir")
     def version(i: Int): DataFrame =
       verRows.filter(_.getLong(1 + 2 * i) > 0L)
         .map(r => (r.getString(0), r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))

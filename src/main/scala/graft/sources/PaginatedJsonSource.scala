@@ -103,7 +103,11 @@ object PaginatedJsonSource {
       if (elems.size < limit) continue = false // short page terminates
       page += 1
     }
-    val raw = pages.result().toDF("arrival_idx", "raw")
+    val rows = pages.result()
+    // no element arrived: the schema-less empty frame, so callers see an
+    // empty schema instead of probing the rows with an action
+    if (rows.isEmpty) return spark.emptyDataFrame
+    val raw = rows.toDF("arrival_idx", "raw")
     // schema from the data itself (reference infers via pd.DataFrame);
     // callers with a pinned schema use from_json directly on `raw`
     val schema = spark.read.json(raw.select("raw").as[String]).schema

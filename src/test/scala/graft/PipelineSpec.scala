@@ -3,6 +3,10 @@ package graft
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window}
+import org.apache.spark.sql.execution.LogicalRDD
+
+import graft.sources.RefSchemas
 
 /** End-to-end pipeline spec: a stub challenge API (two CSVs + paginated
   * transactions with planted duplicates and dirty amounts) → Pipeline.run
@@ -11,7 +15,25 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   */
 class PipelineSpec extends SparkSpec {
 
-  private def serve(body: String => Unit): Unit = {
+  // 5 rows page 0, 2 rows page 1 (short → stop). Duplicate key
+  // (timestamp, account_id) across rows 1/2 — first (arrival) wins.
+  // Row 4 has a dirty amount → coerced to 0.
+  private val txRows = Seq(
+    """{"transaction_id": 1, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": "5.00", "type": "buy", "medium": "card"}""",
+    """{"transaction_id": 2, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": "9.99", "type": "buy", "medium": "card"}""",
+    """{"transaction_id": 3, "timestamp": "2024-01-02 11:00:00", "account_id": 11, "amount": "7.25", "type": "sell", "medium": "app"}""",
+    """{"transaction_id": 4, "timestamp": "2024-01-03 12:00:00", "account_id": 12, "amount": "garbage", "type": "buy", "medium": "card"}""",
+    """{"transaction_id": 5, "timestamp": "2024-02-05 09:00:00", "account_id": 10, "amount": "1.10", "type": "buy", "medium": "app"}""",
+    """{"transaction_id": 6, "timestamp": "2024-02-06 09:00:00", "account_id": 10, "amount": "2.20", "type": "buy", "medium": "app"}""",
+    """{"transaction_id": 7, "timestamp": "2024-02-07 09:00:00", "account_id": 10, "amount": "3.30", "type": "buy", "medium": "app"}""")
+
+  private val views = Seq("client_transaction_counts", "monthly_transaction_summary",
+    "high_transaction_accounts")
+
+  private def serve(body: String => Unit): Unit = serveTx(txRows)(body)
+
+  /** The stub API with `rows` as the transactions feed. */
+  private def serveTx(rows: Seq[String])(body: String => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     def reply(ex: HttpExchange, code: Int, resp: String): Unit = {
       val b = resp.getBytes("UTF-8")
@@ -31,17 +53,6 @@ class PipelineSpec extends SparkSpec {
       // exercise the multi-page path (5 + 2 rows), default-limit
       // callers (graft.Main) get everything in one short page
       val lim = qp.find(_.startsWith("limit=")).map(_.drop(6).toInt).getOrElse(5)
-      // 5 rows page 0, 2 rows page 1 (short → stop). Duplicate key
-      // (timestamp, account_id) across rows 1/2 — first (arrival) wins.
-      // Row 4 has a dirty amount → coerced to 0.
-      val rows = Seq(
-        """{"transaction_id": 1, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": "5.00", "type": "buy", "medium": "card"}""",
-        """{"transaction_id": 2, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": "9.99", "type": "buy", "medium": "card"}""",
-        """{"transaction_id": 3, "timestamp": "2024-01-02 11:00:00", "account_id": 11, "amount": "7.25", "type": "sell", "medium": "app"}""",
-        """{"transaction_id": 4, "timestamp": "2024-01-03 12:00:00", "account_id": 12, "amount": "garbage", "type": "buy", "medium": "card"}""",
-        """{"transaction_id": 5, "timestamp": "2024-02-05 09:00:00", "account_id": 10, "amount": "1.10", "type": "buy", "medium": "app"}""",
-        """{"transaction_id": 6, "timestamp": "2024-02-06 09:00:00", "account_id": 10, "amount": "2.20", "type": "buy", "medium": "app"}""",
-        """{"transaction_id": 7, "timestamp": "2024-02-07 09:00:00", "account_id": 10, "amount": "3.30", "type": "buy", "medium": "app"}""")
       val pageRows = rows.slice(page * lim, page * lim + lim)
       reply(ex, 200, s"""{"results": [${pageRows.mkString(",")}]}""")
     })
@@ -83,13 +94,44 @@ class PipelineSpec extends SparkSpec {
   test("DSv2-connector pipeline variant matches the driver-side pipeline") {
     serve { base =>
       val r1 = Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
-      val views = Seq("client_transaction_counts", "monthly_transaction_summary",
-        "high_transaction_accounts").map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
+      val views1 = views.map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
       val r2 = Pipeline.runWithConnector(spark, base, Some("tok"), limit = 5)
-      val views2 = Seq("client_transaction_counts", "monthly_transaction_summary",
-        "high_transaction_accounts").map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
+      val views2 = views.map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
       assert(r2 === r1)
-      assert(views2 === views)
+      assert(views2 === views1)
+    }
+  }
+
+  test("empty first transactions page: both flows complete with three empty views") {
+    serveTx(Seq.empty) { base =>
+      val flows = Seq[(String, () => Pipeline.Result)](
+        "run" -> (() => Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)),
+        "runWithConnector" -> (() => Pipeline.runWithConnector(spark, base, Some("tok"), limit = 5)))
+      flows.foreach { case (name, flow) =>
+        val r = flow()
+        assert(r.completionLine === "ZYLYTY Data Import Completed [3, 4, 0]", name)
+        assert(spark.table("transactions").columns.toSeq ===
+          RefSchemas.transactions.fieldNames.toSeq, name)
+        views.foreach(v => assert(spark.table(v).count() === 0, s"$name: $v must be empty"))
+      }
+    }
+  }
+
+  test("the three tables are landed once: counts, views and sink read landed rows") {
+    serve { base =>
+      Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
+      Seq("accounts", "clients", "transactions").foreach { t =>
+        val plan = spark.table(t).queryExecution.optimizedPlan
+        assert(plan.collectFirst { case l: LocalRelation => l }.isEmpty,
+          s"$t still re-plans the driver-built ingest relation:\n$plan")
+        assert(plan.collectFirst { case w: Window => w }.isEmpty,
+          s"$t still re-runs the dedup window:\n$plan")
+        plan.collectLeaves() match {
+          case Seq(leaf: LogicalRDD) =>
+            assert(leaf.rdd.isCheckpointed, s"$t's leaf RDD is not the landed one:\n$plan")
+          case leaves => fail(s"$t must read one landed RDD, got leaves $leaves:\n$plan")
+        }
+      }
     }
   }
 
@@ -152,10 +194,18 @@ class PipelineSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val r = Pipeline.run(spark, base, None, limit = 5,
-        maxPages = 1, retrySleepMillis = 1)
+      // the transactions failure is logged like the CSV failures
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val r = try Pipeline.run(spark, base, None, limit = 5,
+        maxPages = 1, retrySleepMillis = 1) finally System.setErr(stderr)
       assert(r === Pipeline.Result(0, 0, 0))
       assert(r.completionLine === "ZYLYTY Data Import Completed [0, 0, 0]")
+      val logged = err.toString("UTF-8")
+      assert(logged.contains(s"[graft] csv ingest failed for $base/download/accounts.csv: "))
+      assert(logged.contains(s"[graft] transactions ingest failed for $base/transactions: "),
+        s"stderr was:\n$logged")
     } finally server.stop(0)
   }
 
