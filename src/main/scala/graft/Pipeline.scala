@@ -95,7 +95,21 @@ object Pipeline {
     Seq("accounts" -> accounts, "clients" -> clients, "transactions" -> transactions)
       .foreach { case (name, df) => df.createOrReplaceTempView(name) }
     createViews(spark)
-    Result(clients.count(), accounts.count(), transactions.count())
+    counts(clients, accounts, transactions)
+  }
+
+  /** The three row counts in one aggregate over the union of the three
+    * frames, each row tagged with its table: one query instead of three
+    * `count()`s (each two jobs under adaptive execution). */
+  private[graft] def counts(clients: DataFrame, accounts: DataFrame,
+                            transactions: DataFrame): Result = {
+    def rows(t: Int) = count(when(col("t") === t, 1))
+    val row = Seq(clients, accounts, transactions).zipWithIndex
+      .map { case (df, t) => df.select(lit(t).as("t")) }
+      .reduce(_ union _)
+      .agg(rows(0), rows(1), rows(2))
+      .head()
+    Result(row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
   /** clean_transactions_data (main.py:121-126): typed projection,

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Canonical readers for the driver testdata tables (TESTDATA.md).
   *
@@ -17,16 +21,76 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Reads one table, inferring its parquet schema only on first use.
+    *
+    * Inference reads the footer in a Spark job of its own, even for one
+    * file, and at bench scale that job and the driver time around it are
+    * a large share of a light key's call. So the inferred schema is kept
+    * and every later read passes it in, which starts no job. The schema
+    * is served again only while all of these hold:
+    *
+    *  - the files are the same: the qualified path, and every leaf file's
+    *    path, length and modification time (a table rewritten in place,
+    *    or a re-written Spark directory, is inferred afresh);
+    *  - the confs Spark's parquet schema conversion reads have the same
+    *    values: every conf set under `spark.sql.parquet.*`,
+    *    `spark.sql.legacy.parquet.*` and `spark.sql.variant.*`, and
+    *    `spark.sql.caseSensitive` (so toggling, e.g., `nanosAsLong` or
+    *    `binaryAsString` never serves a stale type).
+    *
+    * The cache is JVM-wide, not per session: a stream's `foreachBatch`
+    * runs on a cloned session, which a per-session cache would miss on
+    * every batch. It holds one schema per path and conf set, never rows.
+    */
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")._1
+
+  private final case class Leaf(path: String, length: Long, modified: Long)
+
+  /** (qualified path, schema confs) → (the leaves it was inferred from, schema). */
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[(String, String)]), (Seq[Leaf], StructType)]()
+
+  private def schemaConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k.startsWith("spark.sql.variant.") || k == "spark.sql.caseSensitive"
+    }.sorted
+
+  /** The table at `path` and, when it could be listed, its total bytes. A
+    * path that cannot be listed goes to Spark as is, so its error stays Spark's.
+    */
+  private def readParquet(spark: SparkSession, path: String): (DataFrame, Option[Long]) = {
+    val listed = scala.util.Try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      val leaves = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => Leaf(f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sortBy(_.path)
+      (fs.makeQualified(p).toString, leaves)
+    }.toOption
+    listed match {
+      case None => (spark.read.parquet(path), None)
+      case Some((qualified, leaves)) =>
+        val key = (qualified, schemaConfs(spark))
+        val bytes = Some(leaves.map(_.length).sum)
+        Option(schemas.get(key)).collect { case (`leaves`, schema) => schema } match {
+          case Some(schema) => (spark.read.schema(schema).parquet(path), bytes)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, (leaves, df.schema))
+            (df, bytes)
+        }
+    }
+  }
 
   /** Parquet splits at row-group boundaries, so a small single-row-group
     * file scans as ONE partition — and every row-local heavy stage
     * downstream (shingling, md5 signatures, tokenization) then runs on
     * one core regardless of cluster size. When the file is small enough
     * that the scan must be that narrow, fan out once to the session's
-    * parallelism. The check is one filesystem metadata call (NOT
-    * `df.rdd.getNumPartitions`, which compiles the whole plan); at real
+    * parallelism. The check reuses the file listing `read` already made
+    * (NOT `df.rdd.getNumPartitions`, which compiles the whole plan); at real
     * scale tables are far over the threshold and this is a no-op.
     *
     * OPT-IN at the operator layer (the `*Fanned` readers), never baked
@@ -36,12 +100,10 @@ object Tables {
     * Catalyst's ColumnPruning pushes projections below the round-robin
     * Repartition, so fanning never shuffles columns the query drops.
     */
-  private def ensureParallelism(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val small = scala.util.Try(fs.getContentSummary(p).getLength < 32L * 1024 * 1024)
-      .getOrElse(false)
-    if (small) df.repartition(spark.sparkContext.defaultParallelism) else df
+  private def ensureParallelism(spark: SparkSession, read: (DataFrame, Option[Long])): DataFrame = {
+    val (df, bytes) = read
+    if (bytes.exists(_ < 32L * 1024 * 1024)) df.repartition(spark.sparkContext.defaultParallelism)
+    else df
   }
 
   /** `documents` fanned to full parallelism — for operators whose
@@ -49,13 +111,13 @@ object Tables {
     * dominates and happens BEFORE any shuffle.
     */
   def documentsFanned(spark: SparkSession, sfDir: String): DataFrame =
-    ensureParallelism(spark, s"$sfDir/documents.parquet", documents(spark, sfDir))
+    ensureParallelism(spark, readParquet(spark, s"$sfDir/documents.parquet"))
 
   /** `embeddings` fanned to full parallelism — for vector-scoring
     * operators (the O(d) per-row arithmetic runs pre-shuffle).
     */
   def embeddingsFanned(spark: SparkSession, sfDir: String): DataFrame =
-    ensureParallelism(spark, s"$sfDir/embeddings.parquet", embeddings(spark, sfDir))
+    ensureParallelism(spark, readParquet(spark, s"$sfDir/embeddings.parquet"))
 
   // There is deliberately NO eventsFanned: every event operator was
   // benched both ways at sf0.1 and the unfanned reads win — the event

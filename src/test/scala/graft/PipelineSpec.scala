@@ -135,6 +135,19 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("the three counts come from one aggregate of at most two jobs") {
+    serve { base =>
+      val r = Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
+      val Seq(clients, accounts, transactions) =
+        Seq("clients", "accounts", "transactions").map(spark.table)
+      var again: Pipeline.Result = null
+      val jobs = jobsDuring { again = Pipeline.counts(clients, accounts, transactions) }
+      assert(again === r)
+      assert(again === Pipeline.Result(clients.count(), accounts.count(), transactions.count()))
+      assert(jobs <= 2, s"the three counts took $jobs jobs")
+    }
+  }
+
   test("live JDBC round-trip (embedded Derby): append x3, read-back, re-append, overwrite") {
     serve { base =>
       Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)

@@ -52,7 +52,6 @@ class PlanAuditSpec extends SparkSpec {
     "q_collocations",       // crossJoin(broadcast(1-row corpus totals))
     "q_heavy_hitters",      // crossJoin(broadcast(1-row total-token aggregate))
     "q_countmin_counts",    // crossJoin(broadcast(1-row total aggregate)) onto the 10-row probe
-    "q_curation_funnel",    // crosses five 1-row stage aggregates; pair stage is the allowed bitmap BNLJ
     "q_hll_intersect",      // crossJoin of the 1-row exact twin with the 1-row sketch aggregate (1×1)
     "q_fk_inference",       // per-pair cross of three 1-row stat aggregates (1×1×1, 8 pairs)
     "q_triangle_count",     // consumes the all-pairs pair generator; scalar panel is a 1×1×1 cross

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,4 +34,27 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf0001
+
+  /** Spark jobs submitted while `body` runs. The listener bus delivers
+    * job events asynchronously, so it is drained before the listener is
+    * attached (earlier jobs must not count) and again before the count is
+    * read; each wait is bounded, and a timeout fails the test. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      try bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(30000L))
+      catch { case e: java.lang.reflect.InvocationTargetException =>
+        fail("the listener bus did not drain within 30 s", e.getCause) }
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain() }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }
