@@ -45,7 +45,7 @@ object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     readParquet(spark, s"$sfDir/$name.parquet")._1
 
-  private final case class Leaf(path: String, length: Long, modified: Long)
+  private[graft] final case class Leaf(path: String, length: Long, modified: Long)
 
   /** (qualified path, schema confs) → (the leaves it was inferred from, schema). */
   private val schemas =
@@ -57,11 +57,12 @@ object Tables {
         k.startsWith("spark.sql.variant.") || k == "spark.sql.caseSensitive"
     }.sorted
 
-  /** The table at `path` and, when it could be listed, its total bytes. A
-    * path that cannot be listed goes to Spark as is, so its error stays Spark's.
+  /** The qualified `path` and its leaf files sorted by path, or None when
+    * `path` cannot be listed. The schema cache keys on this listing, and
+    * `Layout.baseFingerprint` fingerprints a table with it.
     */
-  private def readParquet(spark: SparkSession, path: String): (DataFrame, Option[Long]) = {
-    val listed = scala.util.Try {
+  private[graft] def leaves(spark: SparkSession, path: String): Option[(String, Seq[Leaf])] =
+    scala.util.Try {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(p, true)
@@ -69,7 +70,12 @@ object Tables {
         .map(f => Leaf(f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sortBy(_.path)
       (fs.makeQualified(p).toString, leaves)
     }.toOption
-    listed match {
+
+  /** The table at `path` and, when it could be listed, its total bytes. A
+    * path that cannot be listed goes to Spark as is, so its error stays Spark's.
+    */
+  private def readParquet(spark: SparkSession, path: String): (DataFrame, Option[Long]) = {
+    leaves(spark, path) match {
       case None => (spark.read.parquet(path), None)
       case Some((qualified, leaves)) =>
         val key = (qualified, schemaConfs(spark))

@@ -2087,6 +2087,11 @@ object GovernanceOps {
       .select(col("o_orderkey"), col("k"), col("d"), col("prio"),
         col("cents"), col("file_id"))
       .localCheckpoint()
+    // A session pin, not a write option, on purpose. On Spark 4.1 an
+    // `.option("partitionOverwriteMode", "dynamic")` on `insertInto` is
+    // ignored for this session parquet table, and the static overwrite
+    // then wipes the untouched partitions; `writeTo(t)
+    // .overwritePartitions()` throws "Cannot write into v1 table".
     val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     try {
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -127,6 +127,55 @@ object Layout {
     name
   }
 
+  /** Metadata-only freshness fingerprint of `tables` under `sfDir`: md5
+    * over `version` and every leaf file's (path, length, modification
+    * time), from the same listing [[graft.Tables.read]] makes. A probe
+    * that scanned the base tables would cost what a derived table exists
+    * to save; the file listing is the signal warehouse MV engines key
+    * refresh on. A table that cannot be listed enters as `absent:<t>`. */
+  def baseFingerprint(spark: SparkSession, sfDir: String, tables: Seq[String],
+      version: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(s"$version;".getBytes("UTF-8"))
+    for (t <- tables) graft.Tables.leaves(spark, s"$sfDir/$t.parquet") match {
+      case Some((_, leaves)) => leaves.foreach(l =>
+        md.update(s"${l.path}|${l.length}|${l.modified};".getBytes("UTF-8")))
+      case None => md.update(s"absent:$t".getBytes("UTF-8"))
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** [[ensureTable]] for a table derived from base tables: `name` is
+    * built once per CONTENT of `tables` under `sfDir`, not once per
+    * path. A 1-row sidecar `<name>_fp` holds the [[baseFingerprint]] at
+    * build time; a missing, empty or different sidecar drops and
+    * rebuilds `name` instead of serving it stale (a corpus regenerated
+    * under the same path). The sidecar is written AFTER the table, so a
+    * crash between the two re-runs the build. Bump `version` when the
+    * built table's schema changes, so a persisted older one rebuilds. */
+  def ensureFresh(spark: SparkSession, name: String, sfDir: String,
+      tables: Seq[String], version: String)(build: String => Unit): String = {
+    val fpName = name + "_fp"
+    val fp = baseFingerprint(spark, sfDir, tables, version)
+    // take(1).headOption: a ZERO-ROW sidecar (partial failure between
+    // table creation and data commit) must read as stale, not throw
+    val stale = spark.catalog.tableExists(name) &&
+      (!spark.catalog.tableExists(fpName) ||
+        spark.table(fpName).take(1).headOption.forall(_.getString(0) != fp))
+    if (stale) {
+      spark.sql(s"DROP TABLE IF EXISTS $fpName")
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+    ensureTable(spark, name) { n =>
+      build(n)
+      spark.sql(s"DROP TABLE IF EXISTS $fpName") // any orphaned sidecar
+      ensureTable(spark, fpName) { f =>
+        import spark.implicits._
+        Seq(fp).toDF("fp").write.format("parquet").saveAsTable(f)
+      }
+    }
+  }
+
   // ---------------------------------------------------------------------
   // Epoch-versioned indexes
   //

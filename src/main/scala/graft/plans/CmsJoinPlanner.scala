@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LogicalPlan, Project, SHUFFLE_MERGE}
@@ -38,9 +38,9 @@ import graft.operators.{Layout, RelOps}
   *    renamed key, a value-filtered side (the sketch summarizes the
   *    UNFILTERED table), a pre-existing user hint — is left untouched.
   *
-  * Like the MV rewrites this is a real `Rule[LogicalPlan]` on
-  * `experimental.extraOptimizations`, installed for a bounded window by
-  * the gated key and the specs; decisions are plan-level only, so the
+  * Like the MV rewrites this is a real `Rule[LogicalPlan]`, applied by
+  * [[rewrite]] to one DataFrame's optimized plan and never installed on
+  * the session; decisions are plan-level only (join hints), so the
   * rule can never change results — CmsJoinPlannerSpec asserts the plan
   * flips both ways (low estimate → BroadcastHashJoin under a disabled
   * static threshold; exploding estimate → SortMergeJoin under a static
@@ -73,94 +73,48 @@ object CmsJoinPlanner {
     ("orders", "o_orderkey", "lineitem", "l_orderkey"),
     ("events", "user_id", "events", "user_id"))
 
+  /** The base tables the sketches describe — the sidecar's lineage. */
+  private[plans] val Sketched: Seq[String] =
+    Registry.flatMap { case (ta, _, tb, _) => Seq(ta, tb) }.distinct
+
   def statsTable(sfDir: String): String =
     "graft_cms_plan_stats_" + Layout.corpusTag(sfDir)
 
-  private def fpTable(sfDir: String): String = statsTable(sfDir) + "_fp"
-
-  /** Metadata-only freshness fingerprint over every registered base
-    * table (the MvJoinRewrite.baseFingerprint discipline). */
-  private[graft] def baseFingerprint(spark: SparkSession, sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update("cms_stats:v2;".getBytes("UTF-8"))
-    for (t <- Seq("customer", "orders", "lineitem", "events")) {
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val entries = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val s = it.next()
-          entries += s"${s.getPath}|${s.getLen}|${s.getModificationTime}"
-        }
-        entries.sorted.foreach(e => md.update((e + ";").getBytes("UTF-8")))
-      } else md.update(s"absent:$t".getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def keyFrame(spark: SparkSession, sfDir: String,
-      table: String, key: String): DataFrame = {
-    val t = table match {
-      case "customer" => Tables.customer(spark, sfDir)
-      case "orders" => Tables.orders(spark, sfDir)
-      case "lineitem" => Tables.lineitem(spark, sfDir)
-      case "events" => Tables.events(spark, sfDir)
-    }
-    t.select(col(key).as("k"))
-  }
-
-  /** Build (once per corpus CONTENT) the 3-row stats sidecar:
-    * (pair, n_a, n_b, est) per registered join edge — four one-scan
-    * d×w sketches plus exact side counts, est from the Count-Min
-    * inner product. Fingerprint sidecar written AFTER the stats. */
-  def ensureStats(spark: SparkSession, sfDir: String): String = {
-    val name = statsTable(sfDir)
-    val fpName = fpTable(sfDir)
-    val fp = baseFingerprint(spark, sfDir)
-    val stale = spark.catalog.tableExists(name) &&
-      (!spark.catalog.tableExists(fpName) ||
-        spark.table(fpName).take(1).headOption.forall(_.getString(0) != fp))
-    if (stale) {
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-    Layout.ensureTable(spark, name) { n =>
+  /** Build (once per corpus CONTENT, [[Layout.ensureFresh]]) the 3-row
+    * stats sidecar: (pair, n_a, n_b, est) per registered join edge —
+    * four one-scan d×w sketches plus exact side counts, est from the
+    * Count-Min inner product. */
+  def ensureStats(spark: SparkSession, sfDir: String): String =
+    Layout.ensureFresh(spark, statsTable(sfDir), sfDir, Sketched, "cms_stats:v2") { n =>
       val rows = Registry.map { case (ta, ka, tb, kb) =>
-        val a = keyFrame(spark, sfDir, ta, ka)
         val selfJoin = ta == tb && ka == kb
+        val a = Tables.read(spark, sfDir, ta).select(col(ka).as("k"))
+        val b = if (selfJoin) a else Tables.read(spark, sfDir, tb).select(col(kb).as("k"))
         val ca = RelOps.cmsKeyCounters(a, RelOps.JcDepth, RelOps.JcWidth)
           .localCheckpoint() // ≤ d·w rows, corpus-independent
         val cb = if (selfJoin) ca
-          else RelOps.cmsKeyCounters(keyFrame(spark, sfDir, tb, kb),
-            RelOps.JcDepth, RelOps.JcWidth).localCheckpoint()
+          else RelOps.cmsKeyCounters(b, RelOps.JcDepth, RelOps.JcWidth).localCheckpoint()
         a.agg(count(lit(1)).as("n_a"))
-          .crossJoin(if (selfJoin) a.agg(count(lit(1)).as("n_b"))
-            else keyFrame(spark, sfDir, tb, kb).agg(count(lit(1)).as("n_b")))
+          .crossJoin(b.agg(count(lit(1)).as("n_b")))
           .crossJoin(RelOps.cmsJoinEstimate(ca, cb))
           .select(lit(s"$ta|$ka|$tb|$kb").as("pair"),
             col("n_a"), col("n_b"), col("est"))
       }
       rows.reduce(_.unionByName(_)).coalesce(1)
         .write.format("parquet").saveAsTable(n)
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      Layout.ensureTable(spark, fpName) { f =>
-        import spark.implicits._
-        Seq(fp).toDF("fp").write.format("parquet").saveAsTable(f)
-      }
     }
-  }
 
   /** Resolve a join side to a registered base table, tolerating only
     * Projects and IsNotNull-on-any-column Filters (the inner join's
     * own implied constraints — they do not change cardinality of the
     * MATCHED rows the estimate predicts). A value predicate means the
     * sketch no longer describes the input → None. Shared by the hint
-    * rule and the reorder rule so table resolution cannot drift. */
+    * rule, the reorder rule and [[NdvAggPlanner]] (whose sidecar covers
+    * the same four tables) so table resolution cannot drift. */
   private[plans] def sideOf(sfDir: String, plan: LogicalPlan): Option[String] =
     plan match {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        Seq("customer", "orders", "lineitem", "events").find(t =>
+        Sketched.find(t =>
           fs.location.rootPaths.exists(
             _.toString.endsWith(s"$sfDir/$t.parquet")))
       case Project(_, child) => sideOf(sfDir, child)
@@ -200,7 +154,7 @@ object CmsJoinPlanner {
   case class CmsJoinHintRule(spark: SparkSession, sfDir: String)
       extends Rule[LogicalPlan] {
 
-    // 3-row driver state, loaded once per install window
+    // 3-row driver state, loaded once per rewrite
     private lazy val stats: Map[String, (Long, Long, BigInt)] =
       loadStats(spark, sfDir)
 
@@ -241,20 +195,14 @@ object CmsJoinPlanner {
     }
   }
 
-  /** Install (or refresh) the rule on the session — idempotent. */
-  def install(spark: SparkSession, sfDir: String): Unit = {
+  /** `df` with the sketch's join-algorithm hints: the hint rule runs
+    * once over `df`'s own optimized plan, which is then re-optimized as
+    * a new DataFrame. Ensures the stats sidecar first. */
+  def rewrite(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
     ensureStats(spark, sfDir)
-    val others = spark.experimental.extraOptimizations
-      .filterNot(_.isInstanceOf[CmsJoinHintRule])
-    spark.experimental.extraOptimizations =
-      others :+ CmsJoinHintRule(spark, sfDir)
+    GraftColumnBridge.ofRows(spark,
+      CmsJoinHintRule(spark, sfDir)(df.queryExecution.optimizedPlan))
   }
-
-  /** Remove the rule from the session. */
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[CmsJoinHintRule])
 
   /** The BASE query — the reference chain's fact edge rolled up per
     * priority, written with no knowledge of the rule. */
@@ -271,25 +219,14 @@ object CmsJoinPlanner {
       .orderBy(col("priority"))
   }
 
-  /** q_cms_join_planned: ensure the sketch sidecar, install the rule,
-    * run the base FK-join rollup with the STATIC broadcast threshold
-    * disabled — the sketch's low estimate (est ≈ |lineitem|, an FK
-    * join) must carry the broadcast decision alone, and the oracle
-    * gates that the re-planned join is exact. Bounded install window +
-    * conf restore. */
-  def cmsPlannedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    install(spark, sfDir)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = priorityRollupBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the re-planned join
-      df
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      uninstall(spark)
-    }
-  }
+  /** q_cms_join_planned: the base FK-join rollup with the sketch's
+    * hints — the low estimate (est ≈ |lineitem|, an FK join) hints the
+    * broadcast, and the oracle gates that the re-planned join is exact.
+    * A hint holds whatever the static broadcast threshold says, which
+    * CmsJoinPlannerSpec asserts under a disabled threshold, so the key
+    * leaves the session's threshold alone. */
+  def cmsPlannedJoin(spark: SparkSession, sfDir: String): DataFrame =
+    rewrite(spark, sfDir, priorityRollupBase(spark, sfDir))
 
   val cmsPlannedJoinSql: String =
     """SELECT o.o_orderpriority AS priority,
@@ -303,8 +240,8 @@ object CmsJoinPlanner {
 
   /** Reassociate only when the alternative intermediate is at most HALF
     * the written one: the margin makes the rewrite and its reverse
-    * mutually exclusive, so the rule is a fixpoint under the optimizer's
-    * repeated application and never flaps on near-equal estimates. */
+    * mutually exclusive, so re-applying the rule to its own output
+    * changes nothing and it never flaps on near-equal estimates. */
   val ReorderMargin = 2L
 
   /** Sketch-driven JOIN REORDERING — the other half of what a
@@ -386,20 +323,14 @@ object CmsJoinPlanner {
     }
   }
 
-  /** Install (or refresh) the reorder rule on the session — idempotent. */
-  def installReorder(spark: SparkSession, sfDir: String): Unit = {
+  /** `df` with its join chains reordered by the sketch: the reorder
+    * rule runs once over `df`'s own optimized plan, which is then
+    * re-optimized as a new DataFrame. Ensures the stats sidecar first. */
+  def reorder(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
     ensureStats(spark, sfDir)
-    val others = spark.experimental.extraOptimizations
-      .filterNot(_.isInstanceOf[CmsJoinReorderRule])
-    spark.experimental.extraOptimizations =
-      others :+ CmsJoinReorderRule(spark, sfDir)
+    GraftColumnBridge.ofRows(spark,
+      CmsJoinReorderRule(spark, sfDir)(df.queryExecution.optimizedPlan))
   }
-
-  /** Remove the reorder rule from the session. */
-  def uninstallReorder(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[CmsJoinReorderRule])
 
   /** The BAD-ORDER base query: the reference chain written fact-first,
     * with no knowledge of the rule — the shape a naive user (or a query
@@ -421,19 +352,12 @@ object CmsJoinPlanner {
       .orderBy(col("segment"))
   }
 
-  /** q_cms_join_reorder: ensure the sketch sidecar, install the reorder
-    * rule, run the fact-first chain — the sketch's est|customer ⋈
-    * orders| ≈ |orders| vs est|orders ⋈ lineitem| ≈ |lineitem| carries
-    * the reassociation, and the oracle gates that the re-ordered plan
-    * is exact. Bounded install window. */
-  def cmsReorderedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    installReorder(spark, sfDir)
-    try {
-      val df = segmentRollupBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the re-planned join
-      df
-    } finally uninstallReorder(spark)
-  }
+  /** q_cms_join_reorder: the fact-first chain, reordered — the sketch's
+    * est|customer ⋈ orders| ≈ |orders| vs est|orders ⋈ lineitem| ≈
+    * |lineitem| carries the reassociation, and the oracle gates that the
+    * re-ordered plan is exact. */
+  def cmsReorderedJoin(spark: SparkSession, sfDir: String): DataFrame =
+    reorder(spark, sfDir, segmentRollupBase(spark, sfDir))
 
   val cmsReorderedJoinSql: String =
     """SELECT c.c_mktsegment AS segment,

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -38,7 +38,9 @@ import graft.operators.Layout
   * through to the base plan (spec'd negative controls). The
   * partial-aggregate algebra is exact: count → sum of day counts,
   * decimal sum → sum of day decimal sums (associative, widened
-  * losslessly, cast back to the original result type).
+  * losslessly, cast back to the original result type). Like
+  * [[MvRewrite]], the rule is applied by [[rewrite]] to one DataFrame's
+  * optimized plan, never installed on the session.
   */
 object MvJoinRewrite {
 
@@ -47,66 +49,25 @@ object MvJoinRewrite {
   def mvTable(sfDir: String): String =
     "graft_mv_client_daily_" + Layout.corpusTag(sfDir)
 
-  private def fpTable(sfDir: String): String = mvTable(sfDir) + "_fp"
-
-  /** Metadata-only freshness fingerprint over ALL THREE base tables —
-    * the [[MvRewrite.ordersFingerprint]] discipline, widened to the
-    * join MV's full lineage: a regenerated customer, orders, OR
-    * lineitem under the same path must rebuild. */
-  private[graft] def baseFingerprint(spark: SparkSession, sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    // MV SCHEMA version — bumping it makes every existing MV read as
-    // stale, so a schema evolution (r13: + n_amt avg-divisor partial)
-    // rebuilds instead of serving a column the rule expects but the
-    // persisted table lacks
-    md.update("schema:v2;".getBytes("UTF-8"))
-    for (t <- Seq("customer", "orders", "lineitem")) {
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val entries = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val s = it.next()
-          entries += s"${s.getPath}|${s.getLen}|${s.getModificationTime}"
-        }
-        entries.sorted.foreach(e => md.update((e + ";").getBytes("UTF-8")))
-      } else md.update(s"absent:$t".getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
+  /** The join MV's full lineage: a regenerated customer, orders, OR
+    * lineitem under the same path must rebuild it. */
+  private val BaseTables = Seq("customer", "orders", "lineitem")
 
   /** Build (once per corpus CONTENT) the day×client join MV:
-    * (client_email, day, n_tx, amount) with `amount` the exact
+    * (client_email, day, n_tx, amount, n_amt) with `amount` the exact
     * decimal(28,2) day-grain sum — the widened type `sum` over
     * decimal(18,2) produces, so re-aggregation stays in exact decimal
-    * arithmetic end to end. Fingerprint sidecar written AFTER the MV
-    * (crash between the two re-runs the build). */
-  def ensureMv(spark: SparkSession, sfDir: String): String = {
-    val name = mvTable(sfDir)
-    val fpName = fpTable(sfDir)
-    val fp = baseFingerprint(spark, sfDir)
-    // take(1).headOption: a ZERO-ROW sidecar (partial failure between
-    // table creation and data commit) must read as stale, not throw
-    val stale = spark.catalog.tableExists(name) &&
-      (!spark.catalog.tableExists(fpName) ||
-        spark.table(fpName).take(1).headOption.forall(_.getString(0) != fp))
-    if (stale) {
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-    Layout.ensureTable(spark, name) { n =>
+    * arithmetic end to end. Freshness is [[Layout.ensureFresh]]'s; the
+    * MV SCHEMA version in it (v2: + the n_amt avg-divisor partial)
+    * makes an MV persisted under an older schema rebuild instead of
+    * lacking a column the rule expects. */
+  def ensureMv(spark: SparkSession, sfDir: String): String =
+    Layout.ensureFresh(spark, mvTable(sfDir), sfDir, BaseTables, "schema:v2") { n =>
       dayClientPartialsOf(spark, sfDir,
           Tables.lineitem(spark, sfDir)
             .select(col("l_orderkey"), col("l_shipdate"), col("l_extendedprice")))
         .write.format("parquet").saveAsTable(n)
-      spark.sql(s"DROP TABLE IF EXISTS $fpName") // any orphaned sidecar
-      Layout.ensureTable(spark, fpName) { f =>
-        import spark.implicits._
-        Seq(fp).toDF("fp").write.format("parquet").saveAsTable(f)
-      }
     }
-  }
 
   /** The MV's partial-aggregate DELTA for any lineitem-shaped fact
     * frame: join the STATIC dimensions, aggregate to (client_email,
@@ -153,7 +114,7 @@ object MvJoinRewrite {
         Seq[(Expression, Expression)],
         Seq[Expression])] = plan match {
       case lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        Seq("customer", "orders", "lineitem").collectFirst {
+        BaseTables.collectFirst {
           case t if fs.location.rootPaths.exists(
               _.toString.endsWith(s"$sfDir/$t.parquet")) =>
             (Map(t -> lr), Map.empty[ExprId, Expression],
@@ -367,19 +328,14 @@ object MvJoinRewrite {
     }
   }
 
-  /** Install (or refresh) the rule on the session — idempotent. */
-  def install(spark: SparkSession, sfDir: String): Unit = {
-    val others = spark.experimental.extraOptimizations
-      .filterNot(_.isInstanceOf[ClientDailyMvRule])
-    spark.experimental.extraOptimizations =
-      others :+ ClientDailyMvRule(spark, sfDir)
+  /** `df` with every aggregate the join MV can serve re-aggregating the
+    * MV instead: the rule runs once over `df`'s own optimized plan,
+    * which is then re-optimized as a new DataFrame. Ensures the MV. */
+  def rewrite(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
+    ensureMv(spark, sfDir)
+    GraftColumnBridge.ofRows(spark,
+      ClientDailyMvRule(spark, sfDir)(df.queryExecution.optimizedPlan))
   }
-
-  /** Remove the rule from the session. */
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[ClientDailyMvRule])
 
   /** The BASE query — the reference's monthly_transaction_summary
     * rollup (3-table join, month×client grain, count + exact decimal
@@ -406,20 +362,11 @@ object MvJoinRewrite {
       .orderBy(col("month"), col("client_email"))
   }
 
-  /** q_mv_join_rewrite: ensure the join MV, install the rule, run the
-    * BASE 3-table query — the oracle (plain SQL joining the base
-    * tables) gates that the transparent rewrite is exact. Bounded
-    * install window + fingerprint freshness, the [[MvRewrite]]
-    * discipline. */
-  def monthlyClientRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureMv(spark, sfDir)
-    install(spark, sfDir)
-    try {
-      val df = monthlyClientRollupBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the rewritten plan
-      df
-    } finally uninstall(spark)
-  }
+  /** q_mv_join_rewrite: the BASE 3-table query, rewritten to the join
+    * MV — the oracle (plain SQL joining the base tables) gates that the
+    * transparent rewrite is exact. */
+  def monthlyClientRollup(spark: SparkSession, sfDir: String): DataFrame =
+    rewrite(spark, sfDir, monthlyClientRollupBase(spark, sfDir))
 
   val monthlyClientRollupSql: String =
     """SELECT
@@ -466,18 +413,11 @@ object MvJoinRewrite {
       .orderBy(col("month"), col("client_email"))
   }
 
-  /** q_mv_avg_rewrite: ensure the MV, install the rule, run the BASE
-    * avg rollup — the rewrite must serve count, sum, AND the avg
-    * decomposition from the day×client partials. */
-  def monthlyClientAvgRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureMv(spark, sfDir)
-    install(spark, sfDir)
-    try {
-      val df = monthlyClientAvgBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the rewritten plan
-      df
-    } finally uninstall(spark)
-  }
+  /** q_mv_avg_rewrite: the BASE avg rollup, rewritten to the join MV —
+    * the rewrite must serve count, sum, AND the avg decomposition from
+    * the day×client partials. */
+  def monthlyClientAvgRollup(spark: SparkSession, sfDir: String): DataFrame =
+    rewrite(spark, sfDir, monthlyClientAvgBase(spark, sfDir))
 
   val monthlyClientAvgRollupSql: String =
     """SELECT

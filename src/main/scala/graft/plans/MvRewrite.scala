@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
@@ -37,10 +37,10 @@ import graft.operators.Layout
   * preservation so downstream operators still resolve, merge-aggregate
   * substitution) are exactly what the general rule needs.
   *
-  * Installed via `spark.experimental.extraOptimizations` — the rule
-  * runs AFTER the main optimizer batches, so it matches the optimized
-  * shape (casts simplified, constants folded) and its output is used
-  * as-is by planning.
+  * Applied by [[rewrite]] to one DataFrame's OPTIMIZED plan, so it
+  * matches the optimized shape (casts simplified, constants folded);
+  * nothing is installed on the session, so a query planned
+  * concurrently on it is never rewritten.
   */
 object MvRewrite {
 
@@ -51,65 +51,19 @@ object MvRewrite {
   def mvTable(sfDir: String): String =
     "graft_mv_orders_daily_" + Layout.corpusTag(sfDir)
 
-  /** Driver-side freshness fingerprint of the base table: (path,
-    * length, modification time) of every physical file under
-    * `sfDir/orders.parquet`, md5'd. METADATA-ONLY by design — a
-    * freshness probe that scanned the fact table would cost exactly
-    * what the MV exists to avoid; file-listing is the same cheap
-    * signal warehouse MV engines key refresh on. */
-  private[graft] def ordersFingerprint(spark: SparkSession, sfDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/orders.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    if (fs.exists(p)) {
-      val it = fs.listFiles(p, true)
-      val entries = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val s = it.next()
-        entries += s"${s.getPath}|${s.getLen}|${s.getModificationTime}"
-      }
-      entries.sorted.foreach(e => md.update((e + ";").getBytes("UTF-8")))
-    } else md.update("absent".getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def fpTable(sfDir: String): String = mvTable(sfDir) + "_fp"
-
   /** Build (once per corpus CONTENT) the day-grain partial-aggregate
-    * MV: (status, day, n_orders, cents). The MV is keyed by corpus
-    * path but guarded by [[ordersFingerprint]]: a 1-row sidecar holds
-    * the base table's file fingerprint at build time, and a drifted
-    * fingerprint (corpus regenerated under the same path) drops and
-    * rebuilds the MV instead of transparently serving stale
-    * aggregates. The sidecar is written AFTER the MV, so a crash
-    * between the two re-runs the build rather than publishing stale. */
-  def ensureMv(spark: SparkSession, sfDir: String): String = {
-    val name = mvTable(sfDir)
-    val fpName = fpTable(sfDir)
-    val fp = ordersFingerprint(spark, sfDir)
-    // take(1).headOption: a ZERO-ROW sidecar (partial failure between
-    // table creation and data commit) must read as stale, not throw
-    val stale = spark.catalog.tableExists(name) &&
-      (!spark.catalog.tableExists(fpName) ||
-        spark.table(fpName).take(1).headOption.forall(_.getString(0) != fp))
-    if (stale) {
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-    Layout.ensureTable(spark, name) { n =>
+    * MV: (status, day, n_orders, cents). [[Layout.ensureFresh]] rebuilds
+    * it when `orders` is regenerated under the same path, instead of
+    * transparently serving stale aggregates. */
+  def ensureMv(spark: SparkSession, sfDir: String): String =
+    Layout.ensureFresh(spark, mvTable(sfDir), sfDir, Seq("orders"), "mv_orders_daily:v1") { n =>
       Tables.orders(spark, sfDir)
         .groupBy(col("o_orderstatus").as("status"),
           to_date(col("o_orderdate")).as("day"))
         .agg(count(lit(1)).as("n_orders"),
           sum(floor(col("o_totalprice") * 100)).as("cents"))
         .write.format("parquet").saveAsTable(n)
-      spark.sql(s"DROP TABLE IF EXISTS $fpName") // any orphaned sidecar
-      Layout.ensureTable(spark, fpName) { f =>
-        import spark.implicits._
-        Seq(fp).toDF("fp").write.format("parquet").saveAsTable(f)
-      }
     }
-  }
 
   /** The rewrite rule bound to one corpus's base path + MV table. */
   case class OrdersDailyMvRule(spark: SparkSession, sfDir: String)
@@ -257,22 +211,17 @@ object MvRewrite {
     }
   }
 
-  /** Install (or refresh) the rule on the session — idempotent. */
-  def install(spark: SparkSession, sfDir: String): Unit = {
-    val others = spark.experimental.extraOptimizations
-      .filterNot(_.isInstanceOf[OrdersDailyMvRule])
-    spark.experimental.extraOptimizations =
-      others :+ OrdersDailyMvRule(spark, sfDir)
+  /** `df` with every aggregate the MV can serve re-aggregating the MV
+    * instead: the rule runs once over `df`'s own optimized plan, which
+    * is then re-optimized as a new DataFrame. Ensures the MV first. */
+  def rewrite(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
+    ensureMv(spark, sfDir)
+    GraftColumnBridge.ofRows(spark,
+      OrdersDailyMvRule(spark, sfDir)(df.queryExecution.optimizedPlan))
   }
 
-  /** Remove the rule from the session. */
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[OrdersDailyMvRule])
-
   /** The BASE-table query — written against `orders`, no knowledge of
-    * the MV. With the rule installed, planning serves it from the MV. */
+    * the MV. [[rewrite]] serves it from the MV. */
   private[graft] def monthlyRevenueBase(spark: SparkSession, sfDir: String): DataFrame =
     Tables.orders(spark, sfDir)
       .groupBy(col("o_orderstatus"),
@@ -281,24 +230,12 @@ object MvRewrite {
         sum(floor(col("o_totalprice") * 100)).as("revenue_cents"))
       .orderBy(col("o_orderstatus"), col("month"))
 
-  /** q_mv_rewrite: ensure the MV, install the rule, run the BASE query
-    * — the oracle (plain SQL over orders) gates that the transparent
-    * rewrite is exact. The install window is BOUNDED: the physical plan
-    * is forced (and cached on the DataFrame) while the rule is live,
-    * then the rule is removed — a session-global optimizer rule left
-    * installed would silently subject every later query to rewriting.
-    * Freshness is [[ensureMv]]'s fingerprint sidecar: a corpus
-    * regenerated under the same path drops and rebuilds the MV rather
-    * than serving stale aggregates. */
-  def monthlyRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureMv(spark, sfDir)
-    install(spark, sfDir)
-    try {
-      val df = monthlyRevenueBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the rewritten plan
-      df
-    } finally uninstall(spark)
-  }
+  /** q_mv_rewrite: the BASE query, rewritten to the MV — the oracle
+    * (plain SQL over orders) gates that the transparent rewrite is
+    * exact. Only this DataFrame is rewritten; every other query on the
+    * session, concurrent ones included, plans as written. */
+  def monthlyRevenue(spark: SparkSession, sfDir: String): DataFrame =
+    rewrite(spark, sfDir, monthlyRevenueBase(spark, sfDir))
 
   val monthlyRevenueSql: String =
     """SELECT o_orderstatus,

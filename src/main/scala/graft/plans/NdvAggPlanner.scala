@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
@@ -45,11 +44,11 @@ import graft.operators.Layout
   *    sums are excluded because re-associating their addition changes
   *    ulps (the engine's exact-integer discipline), and count partials
   *    roll up as sums;
-  *  - the pushed side resolves through pure projections / IsNotNull
-  *    filters (plus one value-computing Project: a derived measure
-  *    column like `floor(price·100)` is still per-row B state) to ONE
-  *    registered base table whose join-key column the sidecar
-  *    sketches.
+  *  - the pushed side resolves through projections / IsNotNull
+  *    filters ([[CmsJoinPlanner.sideOf]]; a value-computing Project
+  *    such as a derived `floor(price·100)` measure is still per-row B
+  *    state) to ONE registered base table whose join-key column the
+  *    sidecar sketches.
   *
   * Correctness does not depend on the estimate: the rewrite is exact
   * for the admitted shape regardless of NDV (duplicate matches on the
@@ -58,7 +57,7 @@ import graft.operators.Layout
   * plan flips BOTH ways (FK fact side: 4×-reduction key → pre-agg
   * appears; unique-key side → plan untouched) plus rule-off row
   * identity; q_ndv_agg_planned gates result identity under the oracle
-  * with the rule installed.
+  * with the rule applied by [[rewrite]] (never installed on the session).
   *
   * Scale shape: the sidecar is a ≤|Registry|-row catalog table; the
   * rule's driver state is that map. The rewrite itself REMOVES data
@@ -84,71 +83,26 @@ object NdvAggPlanner {
   def statsTable(sfDir: String): String =
     "graft_ndv_stats_" + Layout.corpusTag(sfDir)
 
-  private def fpTable(sfDir: String): String = statsTable(sfDir) + "_fp"
-
-  private def tableFrame(spark: SparkSession, sfDir: String, t: String): DataFrame =
-    t match {
-      case "customer" => Tables.customer(spark, sfDir)
-      case "orders" => Tables.orders(spark, sfDir)
-      case "lineitem" => Tables.lineitem(spark, sfDir)
-      case "events" => Tables.events(spark, sfDir)
-    }
-
-  /** Metadata-only freshness fingerprint (the CmsJoinPlanner
-    * discipline, own prefix). */
-  private[graft] def baseFingerprint(spark: SparkSession, sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update("ndv_stats:v1;".getBytes("UTF-8"))
-    for (t <- Registry.map(_._1).distinct.sorted) {
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val entries = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val s = it.next()
-          entries += s"${s.getPath}|${s.getLen}|${s.getModificationTime}"
-        }
-        entries.sorted.foreach(e => md.update((e + ";").getBytes("UTF-8")))
-      } else md.update(s"absent:$t".getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Build (once per corpus CONTENT) the NDV sidecar: one row per
-    * registered column — (table, column, n_rows, ndv) from ONE scan
-    * per table (all of a table's HLLs run in a single Aggregate). */
+  /** Build (once per corpus CONTENT, [[Layout.ensureFresh]]) the NDV
+    * sidecar: one row per registered column — (table, column, n_rows,
+    * ndv) from ONE scan per table (all of a table's HLLs run in a
+    * single Aggregate). */
   def ensureStats(spark: SparkSession, sfDir: String): String = {
-    val name = statsTable(sfDir)
-    val fpName = fpTable(sfDir)
-    val fp = baseFingerprint(spark, sfDir)
-    val stale = spark.catalog.tableExists(name) &&
-      (!spark.catalog.tableExists(fpName) ||
-        spark.table(fpName).take(1).headOption.forall(_.getString(0) != fp))
-    if (stale) {
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-    Layout.ensureTable(spark, name) { n =>
-      val perTable = Registry.groupBy(_._1).toSeq.sortBy(_._1).map {
-        case (t, cols) =>
-          val aggs = count(lit(1)).as("n_rows") +:
-            cols.map { case (_, c) =>
-              approx_count_distinct(col(c), 0.02).as(s"ndv_$c") }
-          val row = tableFrame(spark, sfDir, t).agg(aggs.head, aggs.tail: _*)
-          val stacked = cols.map { case (_, c) =>
-            row.select(lit(t).as("table"), lit(c).as("column"),
-              col("n_rows"), col(s"ndv_$c").as("ndv"))
-          }
-          stacked.reduce(_.unionByName(_))
+    val byTable = Registry.groupBy(_._1).toSeq.sortBy(_._1)
+    Layout.ensureFresh(spark, statsTable(sfDir), sfDir, byTable.map(_._1), "ndv_stats:v1") { n =>
+      val perTable = byTable.map { case (t, cols) =>
+        val aggs = count(lit(1)).as("n_rows") +:
+          cols.map { case (_, c) =>
+            approx_count_distinct(col(c), 0.02).as(s"ndv_$c") }
+        val row = Tables.read(spark, sfDir, t).agg(aggs.head, aggs.tail: _*)
+        val stacked = cols.map { case (_, c) =>
+          row.select(lit(t).as("table"), lit(c).as("column"),
+            col("n_rows"), col(s"ndv_$c").as("ndv"))
+        }
+        stacked.reduce(_.unionByName(_))
       }
       perTable.reduce(_.unionByName(_)).coalesce(1)
         .write.format("parquet").saveAsTable(n)
-      spark.sql(s"DROP TABLE IF EXISTS $fpName")
-      Layout.ensureTable(spark, fpName) { f =>
-        import spark.implicits._
-        Seq(fp).toDF("fp").write.format("parquet").saveAsTable(f)
-      }
     }
   }
 
@@ -157,26 +111,6 @@ object NdvAggPlanner {
     spark.table(statsTable(sfDir)).collect().map { r =>
       (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))
     }.toMap
-
-  /** Resolve a plan to its single registered base table, tolerating
-    * Projects (computing ones included — a derived measure is still
-    * per-row state of the same table) and IsNotNull-only Filters. */
-  private[plans] def tableOf(sfDir: String, plan: LogicalPlan): Option[String] =
-    plan match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        Registry.map(_._1).distinct.find(t =>
-          fs.location.rootPaths.exists(
-            _.toString.endsWith(s"$sfDir/$t.parquet")))
-      case Project(_, child) => tableOf(sfDir, child)
-      case Filter(cond, child) =>
-        def onlyNotNull(e: Expression): Boolean = e match {
-          case And(a, b) => onlyNotNull(a) && onlyNotNull(b)
-          case IsNotNull(_) => true
-          case _ => false
-        }
-        if (onlyNotNull(cond)) tableOf(sfDir, child) else None
-      case _ => None
-    }
 
   /** The eager-aggregation rule bound to one corpus's sidecar. */
   case class NdvEagerAggRule(spark: SparkSession, sfDir: String)
@@ -235,7 +169,7 @@ object NdvAggPlanner {
               Some((j.left, j.right, lk))
             else None): Option[(LogicalPlan, LogicalPlan, AttributeReference)]
           if groupExprs.forall(_.isInstanceOf[AttributeReference])
-          t <- tableOf(sfDir, pushed)
+          t <- CmsJoinPlanner.sideOf(sfDir, pushed)
           (n, ndv) <- stats.get((t, jk.name))
           if ndv * ReductionFactor <= n // the sidecar's verdict
           // split the output list: group-key passthroughs (no aggregate
@@ -268,19 +202,14 @@ object NdvAggPlanner {
     }
   }
 
-  /** Install (or refresh) the rule on the session — idempotent. */
-  def install(spark: SparkSession, sfDir: String): Unit = {
+  /** `df` with the sidecar's eager-aggregation decisions: the rule runs
+    * once over `df`'s own optimized plan, which is then re-optimized as
+    * a new DataFrame. Ensures the NDV sidecar first. */
+  def rewrite(spark: SparkSession, sfDir: String, df: DataFrame): DataFrame = {
     ensureStats(spark, sfDir)
-    val others = spark.experimental.extraOptimizations
-      .filterNot(_.isInstanceOf[NdvEagerAggRule])
-    spark.experimental.extraOptimizations =
-      others :+ NdvEagerAggRule(spark, sfDir)
+    GraftColumnBridge.ofRows(spark,
+      NdvEagerAggRule(spark, sfDir)(df.queryExecution.optimizedPlan))
   }
-
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[NdvEagerAggRule])
 
   /** The BASE query — the reference chain's fact rollup written with no
     * knowledge of the rule: priorities × (item count, exact cents). */
@@ -296,18 +225,12 @@ object NdvAggPlanner {
       .orderBy(col("priority"))
   }
 
-  /** q_ndv_agg_planned: ensure the HLL sidecar, install the rule, run
-    * the base FK rollup — the fact side's 4×-reduction join key must
-    * carry the eager-aggregation decision, and the oracle gates that
-    * the re-planned aggregate is exact. Bounded install window. */
-  def ndvPlannedAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    install(spark, sfDir)
-    try {
-      val df = priorityCentsBase(spark, sfDir)
-      df.queryExecution.executedPlan // force + cache the re-planned agg
-      df
-    } finally uninstall(spark)
-  }
+  /** q_ndv_agg_planned: the base FK rollup, re-planned — the fact
+    * side's 4×-reduction join key must carry the eager-aggregation
+    * decision, and the oracle gates that the re-planned aggregate is
+    * exact. */
+  def ndvPlannedAgg(spark: SparkSession, sfDir: String): DataFrame =
+    rewrite(spark, sfDir, priorityCentsBase(spark, sfDir))
 
   val ndvPlannedAggSql: String =
     """SELECT o.o_orderpriority AS priority,

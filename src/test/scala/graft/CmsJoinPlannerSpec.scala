@@ -15,8 +15,8 @@ class CmsJoinPlannerSpec extends SparkSpec {
       p.collect { case s: SortMergeJoinExec => s }.size)
   }
 
-  private def uninstalled[T](body: => T): T =
-    try body finally CmsJoinPlanner.uninstall(spark)
+  private def rewritten(df: org.apache.spark.sql.DataFrame) =
+    CmsJoinPlanner.rewrite(spark, sf, df)
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.get(key)
@@ -41,115 +41,100 @@ class CmsJoinPlannerSpec extends SparkSpec {
 
   test("low estimate → BROADCAST where the static threshold refused; " +
       "rule-off rows identical") {
-    uninstalled {
-      CmsJoinPlanner.install(spark, sf)
-      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-        // static judgment (threshold disabled): SMJ. The sketch says the
-        // FK join's output ≈ |lineitem| (no explosion) and orders is
-        // small in ROWS — the rule alone flips the plan to broadcast.
-        val served = fkJoin
-        val (bhj, smj) = joinExecs(served)
-        assert(bhj === 1 && smj === 0,
-          s"sketch-hinted FK join must broadcast (bhj=$bhj smj=$smj)")
-        val got = served.collect()
-        CmsJoinPlanner.uninstall(spark)
-        val base = fkJoin
-        val (bhj0, smj0) = joinExecs(base)
-        assert(bhj0 === 0 && smj0 === 1,
-          s"rule-off control must sort-merge under a disabled threshold (bhj=$bhj0 smj=$smj0)")
-        assert(got.nonEmpty)
-        assert(got.toSeq === base.collect().toSeq)
-      }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      // static judgment (threshold disabled): SMJ. The sketch says the
+      // FK join's output ≈ |lineitem| (no explosion) and orders is
+      // small in ROWS — the rule alone flips the plan to broadcast.
+      val served = rewritten(fkJoin)
+      val (bhj, smj) = joinExecs(served)
+      assert(bhj === 1 && smj === 0,
+        s"sketch-hinted FK join must broadcast (bhj=$bhj smj=$smj)")
+      val got = served.collect()
+      val base = fkJoin
+      val (bhj0, smj0) = joinExecs(base)
+      assert(bhj0 === 0 && smj0 === 1,
+        s"rule-off control must sort-merge under a disabled threshold (bhj=$bhj0 smj=$smj0)")
+      assert(got.nonEmpty)
+      assert(got.toSeq === base.collect().toSeq)
     }
   }
 
   test("exploding estimate (events self-join F2) → SHUFFLE_MERGE where the " +
       "static threshold would broadcast; rule-off rows identical") {
-    uninstalled {
-      CmsJoinPlanner.install(spark, sf)
-      // static judgment with a huge threshold: broadcast. The sketch's
-      // F2 estimate (skewed users) exceeds 8·(n_a+n_b) — the rule forces
-      // the shuffle join so AQE can split the skew.
-      withConf("spark.sql.autoBroadcastJoinThreshold", (512L << 20).toString) {
-        val served = eventsSelfJoin
-        val (bhj, smj) = joinExecs(served)
-        assert(smj === 1 && bhj === 0,
-          s"exploding self-join must sort-merge (bhj=$bhj smj=$smj)")
-        val got = served.collect()
-        CmsJoinPlanner.uninstall(spark)
-        val base = eventsSelfJoin
-        val (bhj0, smj0) = joinExecs(base)
-        assert(bhj0 === 1 && smj0 === 0,
-          s"rule-off control must broadcast under the huge threshold (bhj=$bhj0 smj=$smj0)")
-        assert(got.toSeq === base.collect().toSeq)
-      }
+    // static judgment with a huge threshold: broadcast. The sketch's
+    // F2 estimate (skewed users) exceeds 8·(n_a+n_b) — the rule forces
+    // the shuffle join so AQE can split the skew.
+    withConf("spark.sql.autoBroadcastJoinThreshold", (512L << 20).toString) {
+      val served = rewritten(eventsSelfJoin)
+      val (bhj, smj) = joinExecs(served)
+      assert(smj === 1 && bhj === 0,
+        s"exploding self-join must sort-merge (bhj=$bhj smj=$smj)")
+      val got = served.collect()
+      val base = eventsSelfJoin
+      val (bhj0, smj0) = joinExecs(base)
+      assert(bhj0 === 1 && smj0 === 0,
+        s"rule-off control must broadcast under the huge threshold (bhj=$bhj0 smj=$smj0)")
+      assert(got.toSeq === base.collect().toSeq)
     }
   }
 
   test("negative controls: a value-filtered side and an unregistered key " +
       "are left to the static planner") {
-    uninstalled {
-      CmsJoinPlanner.install(spark, sf)
-      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-        // a value predicate means the sketch no longer describes the
-        // side — the rule must decline and leave the static SMJ
-        val o = Tables.orders(spark, sf)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .filter(col("o_totalprice") > 1000)
-        val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
-        val filtered = o.join(l, o("o_orderkey") === l("l_orderkey"))
-          .agg(count(lit(1)).as("n"))
-        val (bhj, smj) = joinExecs(filtered)
-        assert(bhj === 0 && smj === 1,
-          s"value-filtered side must fall through to static planning (bhj=$bhj smj=$smj)")
-        // an unregistered join key (registered tables, but the custkey →
-        // suppkey pairing is not a sketched edge)
-        val o2 = Tables.orders(spark, sf).select(col("o_custkey"))
-        val l2 = Tables.lineitem(spark, sf).select(col("l_suppkey"))
-        val unreg = o2.join(l2, o2("o_custkey") === l2("l_suppkey"))
-          .agg(count(lit(1)).as("n"))
-        val (bhj2, smj2) = joinExecs(unreg)
-        assert(bhj2 === 0 && smj2 === 1,
-          s"unregistered key must fall through (bhj=$bhj2 smj=$smj2)")
-      }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      // a value predicate means the sketch no longer describes the
+      // side — the rule must decline and leave the static SMJ
+      val o = Tables.orders(spark, sf)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .filter(col("o_totalprice") > 1000)
+      val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
+      val filtered = rewritten(o.join(l, o("o_orderkey") === l("l_orderkey"))
+        .agg(count(lit(1)).as("n")))
+      val (bhj, smj) = joinExecs(filtered)
+      assert(bhj === 0 && smj === 1,
+        s"value-filtered side must fall through to static planning (bhj=$bhj smj=$smj)")
+      // an unregistered join key (registered tables, but the custkey →
+      // suppkey pairing is not a sketched edge)
+      val o2 = Tables.orders(spark, sf).select(col("o_custkey"))
+      val l2 = Tables.lineitem(spark, sf).select(col("l_suppkey"))
+      val unreg = rewritten(o2.join(l2, o2("o_custkey") === l2("l_suppkey"))
+        .agg(count(lit(1)).as("n")))
+      val (bhj2, smj2) = joinExecs(unreg)
+      assert(bhj2 === 0 && smj2 === 1,
+        s"unregistered key must fall through (bhj=$bhj2 smj=$smj2)")
     }
   }
 
   test("full reference chain: BOTH Q1 edges broadcast from the sketch where " +
       "the static threshold refused; rule-off rows identical") {
-    uninstalled {
-      CmsJoinPlanner.install(spark, sf)
-      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-        // the reference's flagship 3-table chain (main.py:186-188): the
-        // rule must flip BOTH joins to broadcast — customer into
-        // customer⋈orders, and the joined/derived side falls through
-        // (not a bare registered relation), so the orders⋈lineitem edge
-        // is exercised standalone above; here the chain must get at
-        // least the dimension edge
-        def chain = {
-          val c = Tables.customer(spark, sf).select(col("c_custkey"))
-          val o = Tables.orders(spark, sf)
-            .select(col("o_custkey"), col("o_orderkey"))
-          val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
-          c.join(o, c("c_custkey") === o("o_custkey"))
-            .join(l, o("o_orderkey") === l("l_orderkey"))
-            .groupBy(c("c_custkey").as("client_id"))
-            .agg(count(lit(1)).as("n"))
-            .orderBy(col("client_id"))
-        }
-        val served = chain
-        val (bhj, smj) = joinExecs(served)
-        assert(bhj >= 1,
-          s"at least the customer⋈orders edge must broadcast (bhj=$bhj smj=$smj)")
-        val got = served.collect()
-        CmsJoinPlanner.uninstall(spark)
-        val base = chain
-        val (bhj0, smj0) = joinExecs(base)
-        assert(bhj0 === 0 && smj0 === 2,
-          s"rule-off chain must sort-merge both edges (bhj=$bhj0 smj=$smj0)")
-        assert(got.nonEmpty)
-        assert(got.toSeq === base.collect().toSeq)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      // the reference's flagship 3-table chain (main.py:186-188): the
+      // rule must flip BOTH joins to broadcast — customer into
+      // customer⋈orders, and the joined/derived side falls through
+      // (not a bare registered relation), so the orders⋈lineitem edge
+      // is exercised standalone above; here the chain must get at
+      // least the dimension edge
+      def chain = {
+        val c = Tables.customer(spark, sf).select(col("c_custkey"))
+        val o = Tables.orders(spark, sf)
+          .select(col("o_custkey"), col("o_orderkey"))
+        val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
+        c.join(o, c("c_custkey") === o("o_custkey"))
+          .join(l, o("o_orderkey") === l("l_orderkey"))
+          .groupBy(c("c_custkey").as("client_id"))
+          .agg(count(lit(1)).as("n"))
+          .orderBy(col("client_id"))
       }
+      val served = rewritten(chain)
+      val (bhj, smj) = joinExecs(served)
+      assert(bhj >= 1,
+        s"at least the customer⋈orders edge must broadcast (bhj=$bhj smj=$smj)")
+      val got = served.collect()
+      val base = chain
+      val (bhj0, smj0) = joinExecs(base)
+      assert(bhj0 === 0 && smj0 === 2,
+        s"rule-off chain must sort-merge both edges (bhj=$bhj0 smj=$smj0)")
+      assert(got.nonEmpty)
+      assert(got.toSeq === base.collect().toSeq)
     }
   }
 
@@ -182,9 +167,11 @@ class CmsJoinPlannerSpec extends SparkSpec {
     val (ne, _, estF2) = rows("events|user_id|events|user_id")
     assert(estF2 > BigInt(CmsJoinPlanner.ExplosionFactor) * BigInt(2 * ne))
     // idempotence: re-ensure neither rebuilds nor drifts
-    val fp = CmsJoinPlanner.baseFingerprint(spark, sf)
+    def fingerprint() = graft.operators.Layout.baseFingerprint(spark, sf,
+      Seq("customer", "orders", "lineitem", "events"), "v")
+    val fp = fingerprint()
     CmsJoinPlanner.ensureStats(spark, sf)
-    assert(CmsJoinPlanner.baseFingerprint(spark, sf) === fp)
+    assert(fingerprint() === fp)
     assert(spark.table(CmsJoinPlanner.statsTable(sf)).count() === 3L)
   }
 
@@ -209,44 +196,41 @@ class CmsJoinPlannerSpec extends SparkSpec {
 
   test("join reorder: fact-first chain reassociates to dimension-first from the " +
       "sketch; rows identical; well-written and unregistered chains untouched") {
-    try {
-      CmsJoinPlanner.installReorder(spark, sf)
-      val served = CmsJoinPlanner.segmentRollupBase(spark, sf)
-      assert(bottomJoinTables(served) ===
-        Set("customer.parquet", "orders.parquet"),
-        "the orders-sized intermediate must be joined first")
-      val got = served.collect()
-      // well-written chain: nothing to improve — the margin keeps it put
-      val good = {
-        val c = Tables.customer(spark, sf).select(col("c_custkey"), col("c_mktsegment"))
-        val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
-        val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
-        c.join(o, c("c_custkey") === o("o_custkey"))
-          .join(l, o("o_orderkey") === l("l_orderkey"))
-          .groupBy(col("c_mktsegment").as("segment"))
-          .agg(count(lit(1)).as("n"))
-      }
-      assert(bottomJoinTables(good) === Set("customer.parquet", "orders.parquet"))
-      // unregistered edge (part is not a sketched table): untouched
-      val unreg = {
-        val l = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_partkey"))
-        val p = Tables.read(spark, sf, "part").select(col("p_partkey"))
-        val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
-        l.join(p, l("l_partkey") === p("p_partkey"))
-          .join(o, l("l_orderkey") === o("o_orderkey"))
-          .groupBy(col("o_orderpriority").as("pr"))
-          .agg(count(lit(1)).as("n"))
-      }
-      assert(bottomJoinTables(unreg) === Set("lineitem.parquet", "part.parquet"),
-        "an unregistered edge must fall through untouched")
-      CmsJoinPlanner.uninstallReorder(spark)
-      val base = CmsJoinPlanner.segmentRollupBase(spark, sf)
-      assert(bottomJoinTables(base) ===
-        Set("orders.parquet", "lineitem.parquet"),
-        "rule-off control must keep the written fact-first order")
-      assert(got.nonEmpty)
-      assert(got.toSeq === base.collect().toSeq)
-    } finally CmsJoinPlanner.uninstallReorder(spark)
+    def reordered(df: org.apache.spark.sql.DataFrame) = CmsJoinPlanner.reorder(spark, sf, df)
+    val served = CmsJoinPlanner.cmsReorderedJoin(spark, sf)
+    assert(bottomJoinTables(served) ===
+      Set("customer.parquet", "orders.parquet"),
+      "the orders-sized intermediate must be joined first")
+    val got = served.collect()
+    // well-written chain: nothing to improve — the margin keeps it put
+    val good = reordered {
+      val c = Tables.customer(spark, sf).select(col("c_custkey"), col("c_mktsegment"))
+      val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
+      val l = Tables.lineitem(spark, sf).select(col("l_orderkey"))
+      c.join(o, c("c_custkey") === o("o_custkey"))
+        .join(l, o("o_orderkey") === l("l_orderkey"))
+        .groupBy(col("c_mktsegment").as("segment"))
+        .agg(count(lit(1)).as("n"))
+    }
+    assert(bottomJoinTables(good) === Set("customer.parquet", "orders.parquet"))
+    // unregistered edge (part is not a sketched table): untouched
+    val unreg = reordered {
+      val l = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_partkey"))
+      val p = Tables.read(spark, sf, "part").select(col("p_partkey"))
+      val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
+      l.join(p, l("l_partkey") === p("p_partkey"))
+        .join(o, l("l_orderkey") === o("o_orderkey"))
+        .groupBy(col("o_orderpriority").as("pr"))
+        .agg(count(lit(1)).as("n"))
+    }
+    assert(bottomJoinTables(unreg) === Set("lineitem.parquet", "part.parquet"),
+      "an unregistered edge must fall through untouched")
+    val base = CmsJoinPlanner.segmentRollupBase(spark, sf)
+    assert(bottomJoinTables(base) ===
+      Set("orders.parquet", "lineitem.parquet"),
+      "rule-off control must keep the written fact-first order")
+    assert(got.nonEmpty)
+    assert(got.toSeq === base.collect().toSeq)
   }
 
   test("join reorder: a COMPUTING Project between the chained joins (withColumn " +
@@ -263,15 +247,10 @@ class CmsJoinPlannerSpec extends SparkSpec {
         .groupBy(col("c_mktsegment").as("segment"))
         .agg(count(lit(1)).as("n"), sum(col("qty2")).as("q"))
     }
-    val expected =
-      try { CmsJoinPlanner.uninstallReorder(spark); chain().collect().toSeq }
-      finally ()
-    try {
-      CmsJoinPlanner.installReorder(spark, sf)
-      val got = chain()
-      assert(bottomJoinTables(got) === Set("lineitem.parquet", "orders.parquet"),
-        "an Alias-carrying Project must stop the peel (no rewrite)")
-      assert(got.collect().toSeq === expected)
-    } finally CmsJoinPlanner.uninstallReorder(spark)
+    val expected = chain().collect().toSeq
+    val got = CmsJoinPlanner.reorder(spark, sf, chain())
+    assert(bottomJoinTables(got) === Set("lineitem.parquet", "orders.parquet"),
+      "an Alias-carrying Project must stop the peel (no rewrite)")
+    assert(got.collect().toSeq === expected)
   }
 }

@@ -170,6 +170,42 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("ensureFresh: a missing or zero-row fingerprint sidecar reads as stale and rebuilds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fresh").toString
+    val name = "graft_fresh_spec"
+    val s = spark; import s.implicits._
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/base.parquet")
+    var builds = 0
+    def ensure(version: String = "v1"): Unit =
+      Layout.ensureFresh(spark, name, dir, Seq("base"), version) { n =>
+        builds += 1
+        Seq(builds).toDF("build").write.format("parquet").saveAsTable(n)
+      }
+    def built = spark.table(name).head().getInt(0)
+    try {
+      ensure(); ensure()
+      assert(builds === 1) // a fresh sidecar serves the table as built
+      spark.sql(s"DROP TABLE ${name}_fp")
+      ensure()
+      assert(builds === 2 && built === 2, "a missing sidecar must rebuild")
+      // a failure between the sidecar's creation and its data commit
+      spark.sql(s"DROP TABLE ${name}_fp")
+      Seq.empty[String].toDF("fp").write.format("parquet").saveAsTable(name + "_fp")
+      ensure()
+      assert(builds === 3 && built === 3, "a zero-row sidecar must rebuild")
+      assert(spark.table(name + "_fp").count() === 1L)
+      ensure()
+      assert(builds === 3) // the rewritten sidecar is fresh again
+      ensure("v2")
+      assert(builds === 4 && built === 4, "a version bump must rebuild")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"DROP TABLE IF EXISTS ${name}_fp")
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
   test("inParallel: a failing unit rethrows only after every sibling has settled") {
     val boom = new IllegalStateException("boom")
     val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)

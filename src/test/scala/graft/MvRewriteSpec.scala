@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 
+import graft.operators.Layout
 import graft.plans.MvRewrite
 
 class MvRewriteSpec extends SparkSpec {
@@ -16,26 +17,17 @@ class MvRewriteSpec extends SparkSpec {
     }.flatten
 
   test("mv rewrite: the base-table query is transparently served from the MV") {
-    try {
-      val served = MvRewrite.monthlyRevenue(spark, sf) // ensures MV + installs rule
-      val paths = scanPaths(served)
-      assert(paths.nonEmpty)
-      assert(paths.forall(_.contains(MvRewrite.mvTable(sf))),
-        s"rewritten plan still scans the base table: $paths")
-      assert(!paths.exists(_.contains("orders.parquet")))
-      // exactness: rule-off base query on a throwaway comparison
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[MvRewrite.OrdersDailyMvRule])
-      val base = MvRewrite.monthlyRevenueBase(spark, sf)
-      assert(scanPaths(base).exists(_.contains("orders.parquet")),
-        "rule-off control unexpectedly rewritten")
-      assert(served.collect().toSeq === base.collect().toSeq)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[MvRewrite.OrdersDailyMvRule])
-    }
+    val served = MvRewrite.monthlyRevenue(spark, sf) // ensures the MV, rewrites
+    val paths = scanPaths(served)
+    assert(paths.nonEmpty)
+    assert(paths.forall(_.contains(MvRewrite.mvTable(sf))),
+      s"rewritten plan still scans the base table: $paths")
+    assert(!paths.exists(_.contains("orders.parquet")))
+    // exactness: the unrewritten base query
+    val base = MvRewrite.monthlyRevenueBase(spark, sf)
+    assert(scanPaths(base).exists(_.contains("orders.parquet")),
+      "rule-off control unexpectedly rewritten")
+    assert(served.collect().toSeq === base.collect().toSeq)
   }
 
   test("mv freshness: a regenerated corpus under the same path rebuilds the MV") {
@@ -47,15 +39,16 @@ class MvRewriteSpec extends SparkSpec {
       MvRewrite.ensureMv(spark, dir)
       val before = spark.table(MvRewrite.mvTable(dir)).agg(sum("n_orders")).head().getLong(0)
       // steady state: a second ensure with untouched files must NOT rebuild
-      val fp1 = MvRewrite.ordersFingerprint(spark, dir)
+      def fingerprint() = Layout.baseFingerprint(spark, dir, Seq("orders"), "v")
+      val fp1 = fingerprint()
       MvRewrite.ensureMv(spark, dir)
-      assert(MvRewrite.ordersFingerprint(spark, dir) === fp1)
+      assert(fingerprint() === fp1)
       assert(spark.table(MvRewrite.mvTable(dir))
         .agg(sum("n_orders")).head().getLong(0) === before)
       // regenerate the corpus under the SAME path with different content
       Tables.orders(spark, sf).limit(450)
         .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      assert(MvRewrite.ordersFingerprint(spark, dir) !== fp1,
+      assert(fingerprint() !== fp1,
         "fingerprint blind to a rewritten base table")
       MvRewrite.ensureMv(spark, dir)
       val after = spark.table(MvRewrite.mvTable(dir)).agg(sum("n_orders")).head().getLong(0)
@@ -70,37 +63,30 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("mv rewrite negative controls: finer grain and foreign measures fall through") {
-    try {
-      MvRewrite.ensureMv(spark, sf)
-      MvRewrite.install(spark, sf)
-      // day grain is NOT derivable-coarser — must scan the base table
-      val daily = Tables.orders(spark, sf)
-        .groupBy(col("o_orderstatus"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      assert(scanPaths(daily).exists(_.contains("orders.parquet")),
-        "day-grain query was wrongly rewritten to the month-safe MV")
-      // a measure the MV does not carry — must scan the base table
-      val avgQ = Tables.orders(spark, sf)
-        .groupBy(col("o_orderstatus"))
-        .agg(avg(col("o_totalprice")).as("a"))
-      assert(scanPaths(avgQ).exists(_.contains("orders.parquet")),
-        "avg measure was wrongly rewritten")
-      // a grouping-free GLOBAL aggregate: COUNT(*) over an empty base is
-      // 0 but SUM over an empty MV is NULL (and flips nullability) — bail
-      val globalCnt = Tables.orders(spark, sf).agg(count(lit(1)).as("n"))
-      assert(scanPaths(globalCnt).exists(_.contains("orders.parquet")),
-        "global (grouping-free) count was wrongly rewritten")
-      // month grain + covered measures from SQL-built expressions also rewrite
-      val sqlForm = Tables.orders(spark, sf)
-        .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
-        .agg(sum(floor(col("o_totalprice") * 100)).as("cents"))
-      assert(scanPaths(sqlForm).forall(_.contains(MvRewrite.mvTable(sf))),
-        "status-free month grouping should also be served from the MV")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[MvRewrite.OrdersDailyMvRule])
-    }
+    def rewritten(df: org.apache.spark.sql.DataFrame) = MvRewrite.rewrite(spark, sf, df)
+    // day grain is NOT derivable-coarser — must scan the base table
+    val daily = rewritten(Tables.orders(spark, sf)
+      .groupBy(col("o_orderstatus"),
+        date_trunc("day", col("o_orderdate")).as("day"))
+      .agg(count(lit(1)).as("n")))
+    assert(scanPaths(daily).exists(_.contains("orders.parquet")),
+      "day-grain query was wrongly rewritten to the month-safe MV")
+    // a measure the MV does not carry — must scan the base table
+    val avgQ = rewritten(Tables.orders(spark, sf)
+      .groupBy(col("o_orderstatus"))
+      .agg(avg(col("o_totalprice")).as("a")))
+    assert(scanPaths(avgQ).exists(_.contains("orders.parquet")),
+      "avg measure was wrongly rewritten")
+    // a grouping-free GLOBAL aggregate: COUNT(*) over an empty base is
+    // 0 but SUM over an empty MV is NULL (and flips nullability) — bail
+    val globalCnt = rewritten(Tables.orders(spark, sf).agg(count(lit(1)).as("n")))
+    assert(scanPaths(globalCnt).exists(_.contains("orders.parquet")),
+      "global (grouping-free) count was wrongly rewritten")
+    // month grain + covered measures from SQL-built expressions also rewrite
+    val sqlForm = rewritten(Tables.orders(spark, sf)
+      .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
+      .agg(sum(floor(col("o_totalprice") * 100)).as("cents")))
+    assert(scanPaths(sqlForm).forall(_.contains(MvRewrite.mvTable(sf))),
+      "status-free month grouping should also be served from the MV")
   }
 }

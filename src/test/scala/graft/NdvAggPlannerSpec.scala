@@ -23,8 +23,8 @@ class NdvAggPlannerSpec extends SparkSpec {
       case a: SortAggregateExec => a
     }.size
 
-  private def uninstalled[T](body: => T): T =
-    try body finally NdvAggPlanner.uninstall(spark)
+  private def rewritten(df: org.apache.spark.sql.DataFrame) =
+    NdvAggPlanner.rewrite(spark, sf, df)
 
   /** Fact rollup: group keys from orders, aggregates over lineitem —
     * the eager-aggregation shape, pushed key l_orderkey at ~4 rows per
@@ -54,42 +54,34 @@ class NdvAggPlannerSpec extends SparkSpec {
 
   test("fact-side FK key (4x reduction) → pre-aggregate appears below the " +
       "join; rule-off rows identical") {
-    uninstalled {
-      NdvAggPlanner.install(spark, sf)
-      val served = factRollup
-      assert(logicalAggs(served) === 2,
-        s"expected the eager pre-aggregate (2 logical Aggregates), got " +
-          s"${logicalAggs(served)}:\n${served.queryExecution.optimizedPlan}")
-      // the pre-agg groups by the pushed join key
-      val pre = served.queryExecution.optimizedPlan.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.groupingExpressions.exists(_.references.map(_.name)
-            .exists(_ == "l_orderkey")) => a
-      }
-      assert(pre.nonEmpty, "pre-aggregate must group by l_orderkey")
-      val got = served.collect()
-      NdvAggPlanner.uninstall(spark)
-      val base = factRollup
-      assert(logicalAggs(base) === 1,
-        "rule-off control must keep the single written aggregate")
-      assert(physicalAggs(base) < physicalAggs(served),
-        "the rewrite must be visible physically too")
-      assert(got.nonEmpty)
-      assert(got.toSeq === base.collect().toSeq)
+    val served = rewritten(factRollup)
+    assert(logicalAggs(served) === 2,
+      s"expected the eager pre-aggregate (2 logical Aggregates), got " +
+        s"${logicalAggs(served)}:\n${served.queryExecution.optimizedPlan}")
+    // the pre-agg groups by the pushed join key
+    val pre = served.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+        if a.groupingExpressions.exists(_.references.map(_.name)
+          .exists(_ == "l_orderkey")) => a
     }
+    assert(pre.nonEmpty, "pre-aggregate must group by l_orderkey")
+    val got = served.collect()
+    val base = factRollup
+    assert(logicalAggs(base) === 1,
+      "rule-off control must keep the single written aggregate")
+    assert(physicalAggs(base) < physicalAggs(served),
+      "the rewrite must be visible physically too")
+    assert(got.nonEmpty)
+    assert(got.toSeq === base.collect().toSeq)
   }
 
   test("unique pushed key (ndv ≈ n) → the sidecar declines, plan untouched; " +
       "rows identical either way") {
-    uninstalled {
-      NdvAggPlanner.install(spark, sf)
-      val served = uniqueKeyRollup
-      assert(logicalAggs(served) === 1,
-        s"no-win key must not be rewritten:\n${served.queryExecution.optimizedPlan}")
-      val got = served.collect()
-      NdvAggPlanner.uninstall(spark)
-      assert(got.toSeq === uniqueKeyRollup.collect().toSeq)
-    }
+    val served = rewritten(uniqueKeyRollup)
+    assert(logicalAggs(served) === 1,
+      s"no-win key must not be rewritten:\n${served.queryExecution.optimizedPlan}")
+    val got = served.collect()
+    assert(got.toSeq === uniqueKeyRollup.collect().toSeq)
   }
 
   test("sidecar: one row per registered column, ndv within the 2% HLL " +
@@ -121,15 +113,12 @@ class NdvAggPlannerSpec extends SparkSpec {
 
   test("decimal/double sums are outside the envelope: the rule must not " +
       "reassociate float addition") {
-    uninstalled {
-      NdvAggPlanner.install(spark, sf)
-      val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
-      val l = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_extendedprice"))
-      val df = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy(col("o_orderpriority").as("p"))
-        .agg(sum(col("l_extendedprice")).as("s"))
-      assert(logicalAggs(df) === 1,
-        s"double sum must decline:\n${df.queryExecution.optimizedPlan}")
-    }
+    val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_orderpriority"))
+    val l = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_extendedprice"))
+    val df = rewritten(o.join(l, o("o_orderkey") === l("l_orderkey"))
+      .groupBy(col("o_orderpriority").as("p"))
+      .agg(sum(col("l_extendedprice")).as("s")))
+    assert(logicalAggs(df) === 1,
+      s"double sum must decline:\n${df.queryExecution.optimizedPlan}")
   }
 }
