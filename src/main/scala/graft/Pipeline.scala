@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.operators.{Cleaning, Materialize}
+import graft.operators.{Cleaning, Layout, Materialize}
 import graft.sources._
 
 /** The reference's end-to-end batch pipeline (SURVEY.md §3 EP1,
@@ -23,8 +23,15 @@ import graft.sources._
   *    row order, which no distributed engine preserves — SURVEY.md §7);
   *  - the Postgres load becomes `saveTables` (parquet or JDBC via
   *    [[graft.sources.JdbcSink]]) — views run on the engine itself;
+  *  - transactions parse under the pinned string schema (typed by
+  *    `cleanTransactions`) instead of one inferred from the rows, so no
+  *    inference pass runs and a field absent from every row is null;
   *  - the tables are landed once (`Materialize.corpus`) before the views
   *    read them, as the reference loads Postgres before `CREATE VIEW`;
+  *  - the three datasets are requested and landed concurrently (the
+  *    three endpoints are idempotent GETs; transaction pages stay
+  *    serial, in the reference's request order), and `saveTables`
+  *    writes its three tables concurrently;
   *  - ingest failures degrade to typed EMPTY relations (S4) and the
   *    pipeline still completes, like the reference.
   */
@@ -44,8 +51,9 @@ object Pipeline {
           retrySleepMillis: Long = 2000): Result =
     load(spark, baseUrl, token) { fetch =>
       val url = s"$baseUrl/transactions"
-      try PaginatedJsonSource.read(spark, url, fetch, limit = limit,
+      try PaginatedJsonSource.readRaw(spark, url, fetch, limit = limit,
         maxPages = maxPages, retrySleepMillis = retrySleepMillis)
+        .fold(spark.emptyDataFrame)(parseTransactions)
       catch { case NonFatal(e) => // S4, logged like CsvHttpSource.readOrEmpty
         System.err.println(s"[graft] transactions ingest failed for $url: ${e.getMessage}")
         spark.emptyDataFrame
@@ -54,9 +62,8 @@ object Pipeline {
 
   /** Scale variant of [[run]]: transactions ingest goes through the
     * DataSourceV2 paginated-HTTP connector — executors fetch page
-    * ranges in parallel and `from_json` applies the pinned schema
-    * declaratively — instead of the driver-side loop. Same cleaning,
-    * landing, views, and completion line.
+    * ranges in parallel — instead of the driver-side loop. Same
+    * pinned-schema parse, cleaning, landing, views, and completion line.
     */
   def runWithConnector(spark: SparkSession, baseUrl: String, token: Option[String],
                        limit: Int = 1000, maxPages: Int = 300): Result =
@@ -66,13 +73,7 @@ object Pipeline {
         .option("url", s"$baseUrl/transactions")
         .option("pages", maxPages + 1)
         .option("limit", limit)
-      val raw = token.foldLeft(reader)((r, t) => r.option("token", t)).load()
-      // pinned-schema declarative parse of the connector's raw JSON rows
-      val txSchema = StructType(
-        RefSchemas.transactions.fields.map(_.copy(dataType = StringType)))
-      raw.select(col("arrival_idx"), from_json(col("raw"), txSchema).as("r"))
-        .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames
-          .map(n => col(s"r.$n").as(n)): _*)
+      parseTransactions(token.foldLeft(reader)((r, t) => r.option("token", t)).load())
         // materialize ONE fetch pass: no later action may re-issue the HTTP
         // page fetches (a live endpoint could change between actions).
         // Deliberately LOCAL, never Materialize.corpus: recompute-on-loss
@@ -82,16 +83,29 @@ object Pipeline {
         .localCheckpoint()
     }
 
-  /** Both flows' body: each table is landed once, so the counts, views
-    * and sink read landed rows instead of re-running ingest and dedup. */
+  /** Both flows' transactions parse: the `(arrival_idx, raw)` rows under
+    * the pinned schema with every field a string, typed by
+    * `cleanTransactions` — one declarative parse, run by the executors. */
+  private def parseTransactions(raw: DataFrame): DataFrame = {
+    val txSchema = StructType(
+      RefSchemas.transactions.fields.map(_.copy(dataType = StringType)))
+    raw.select(col("arrival_idx"), from_json(col("raw"), txSchema).as("r"))
+      .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames
+        .map(n => col(s"r.$n").as(n)): _*)
+  }
+
+  /** Both flows' body: each table is fetched and landed once, the three
+    * concurrently, so the counts, views and sink read landed rows instead
+    * of re-running ingest and dedup. */
   private def load(spark: SparkSession, baseUrl: String, token: Option[String])(
       readTransactions: HttpFetch => DataFrame): Result = {
     val fetch = new HttpFetch(bearerToken = token)
     def csv(name: String, schema: StructType) = Materialize.corpus(
       CsvHttpSource.readOrEmpty(spark, s"$baseUrl/download/$name.csv", schema, fetch))
-    val accounts = csv("accounts", RefSchemas.accounts)
-    val clients = csv("clients", RefSchemas.clients)
-    val transactions = cleanTransactions(spark, readTransactions(fetch))
+    val Seq(accounts, clients, transactions) = Layout.inParallel(
+      () => csv("accounts", RefSchemas.accounts),
+      () => csv("clients", RefSchemas.clients),
+      () => cleanTransactions(spark, readTransactions(fetch)))
     Seq("accounts" -> accounts, "clients" -> clients, "transactions" -> transactions)
       .foreach { case (name, df) => df.createOrReplaceTempView(name) }
     createViews(spark)
@@ -169,12 +183,12 @@ object Pipeline {
   }
 
   /** Persist the three tables (K1/K2 analog when no JDBC target exists:
-    * parquet lake layout; JDBC via [[saveTablesJdbc]]).
+    * parquet lake layout; JDBC via [[saveTablesJdbc]]), concurrently: the
+    * three writes read landed rows and write separate directories.
     */
   def saveTables(spark: SparkSession, outDir: String): Unit =
-    Seq("accounts", "clients", "transactions").foreach { t =>
-      spark.table(t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-    }
+    Layout.inParallel(Seq("accounts", "clients", "transactions").map(t => () =>
+      spark.table(t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")): _*)
 
   /** The reference's actual database load (main.py:129-172): the three
     * ingested tables APPENDED through typed JDBC with the pinned

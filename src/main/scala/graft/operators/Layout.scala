@@ -82,10 +82,11 @@ object Layout {
     * table another unit writes, and shared input frames must be
     * materialized (localCheckpoint/persist-and-forced) so concurrent
     * actions cannot race their computation. Exceptions propagate:
-    * all units settle, then the first failure rethrows.
+    * all units settle, then the first failure rethrows. Returns each
+    * unit's result in unit order, whatever order they finish in.
     */
-  def inParallel(units: (() => Unit)*): Unit = {
-    if (units.size <= 1) { units.foreach(_()); return }
+  def inParallel[A](units: (() => A)*): Seq[A] = {
+    if (units.size <= 1) return units.map(_())
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -96,8 +97,7 @@ object Layout {
       // settle ALL units (a failed write must not leave a sibling
       // mid-flight when the caller's finally runs), then rethrow
       val results = fs.map(f => Await.ready(f, Duration.Inf).value.get)
-      results.collectFirst { case scala.util.Failure(e) => throw e }
-      ()
+      results.map(_.get)
     } finally pool.shutdown()
   }
 

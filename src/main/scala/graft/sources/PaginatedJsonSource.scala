@@ -2,8 +2,13 @@ package graft.sources
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver-side paginated JSON ingestion (SURVEY.md S3, main.py:90-118):
   * `GET {base}?page={p}&limit={n}` for p = 0..maxPages, stop early when
@@ -18,11 +23,13 @@ import org.apache.spark.sql.functions._
   * a distributed engine (SURVEY.md §7 hard parts; the reference relies
   * on implicit pandas row order).
   *
-  * This form is behaviorally exact w.r.t. the reference but serializes
-  * fetches on the driver. The scale path is the DataSourceV2 connector
-  * ([[graft.sources.v2.PaginatedHttpTableProvider]]): page ranges
-  * become input partitions fetched BY EXECUTORS in parallel, and this
-  * class's per-page logic is shared as the page decoder.
+  * This form is behaviorally exact w.r.t. the reference: it fetches the
+  * pages one after another on the driver, then hands the raw elements
+  * to the executors, which parse them ([[readRaw]] spreads the rows over
+  * `defaultParallelism` partitions). The scale path is the DataSourceV2
+  * connector ([[graft.sources.v2.PaginatedHttpTableProvider]]): page
+  * ranges become input partitions fetched BY EXECUTORS in parallel, and
+  * this class's per-page logic is shared as the page decoder.
   */
 object PaginatedJsonSource {
 
@@ -72,10 +79,13 @@ object PaginatedJsonSource {
     out.result()
   }
 
-  def read(spark: SparkSession, baseUrl: String, fetch: HttpFetch,
-           limit: Int = 1000, maxPages: Int = 300,
-           maxRetriesPerPage: Int = 5, retrySleepMillis: Long = 2000): DataFrame = {
-    import spark.implicits._
+  /** The fetch loop: every element as an `(arrival_idx, raw)` row, spread
+    * over `defaultParallelism` partitions so the executors parse them.
+    * `None` when no element arrived.
+    */
+  def readRaw(spark: SparkSession, baseUrl: String, fetch: HttpFetch,
+              limit: Int = 1000, maxPages: Int = 300,
+              maxRetriesPerPage: Int = 5, retrySleepMillis: Long = 2000): Option[DataFrame] = {
     val pages = Seq.newBuilder[(Long, String)] // (arrival_idx, raw json element)
     var page = 0
     var continue = true
@@ -104,15 +114,33 @@ object PaginatedJsonSource {
       page += 1
     }
     val rows = pages.result()
-    // no element arrived: the schema-less empty frame, so callers see an
-    // empty schema instead of probing the rows with an action
-    if (rows.isEmpty) return spark.emptyDataFrame
-    val raw = rows.toDF("arrival_idx", "raw")
-    // schema from the data itself (reference infers via pd.DataFrame);
-    // callers with a pinned schema use from_json directly on `raw`
-    val schema = spark.read.json(raw.select("raw").as[String]).schema
-    raw.select(col("arrival_idx"),
-        from_json(col("raw"), schema).as("r"))
-      .select(col("arrival_idx"), col("r.*"))
+    if (rows.isEmpty) return None
+    // an RDD, not a LocalRelation: the optimizer would fold every parse
+    // over a local relation into it, on the driver. The plan keeps the
+    // size estimate a LocalRelation of these rows gets, so a join over
+    // the parsed rows still broadcasts them instead of shuffling both sides
+    val schema = StructType(Seq(
+      StructField("arrival_idx", LongType), StructField("raw", StringType)))
+    val rdd = spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism)
+      .map { case (i, s) => InternalRow(i, UTF8String.fromString(s)) }
+    Some(GraftColumnBridge.ofRdd(spark, rdd, schema,
+      EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema)) * rows.size))
+  }
+
+  /** [[readRaw]] parsed under a schema inferred from the data itself (the
+    * reference infers via pd.DataFrame). No element arrived: the
+    * schema-less empty frame, so callers see an empty schema instead of
+    * probing the rows with an action.
+    */
+  def read(spark: SparkSession, baseUrl: String, fetch: HttpFetch,
+           limit: Int = 1000, maxPages: Int = 300,
+           maxRetriesPerPage: Int = 5, retrySleepMillis: Long = 2000): DataFrame = {
+    import spark.implicits._
+    readRaw(spark, baseUrl, fetch, limit, maxPages, maxRetriesPerPage, retrySleepMillis)
+      .fold(spark.emptyDataFrame) { raw =>
+        val schema = spark.read.json(raw.select("raw").as[String]).schema
+        raw.select(col("arrival_idx"), from_json(col("raw"), schema).as("r"))
+          .select(col("arrival_idx"), col("r.*"))
+      }
   }
 }

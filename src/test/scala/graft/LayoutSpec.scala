@@ -218,6 +218,17 @@ class LayoutSpec extends SparkSpec {
     assert(siblingDone.get, "inParallel rethrew while a sibling was still running")
   }
 
+  test("inParallel: results come back in unit order, whatever order the units finish in") {
+    // unit i finishes only after unit i + 1 has: they finish in reverse
+    val done = Seq.fill(3)(new java.util.concurrent.CountDownLatch(1))
+    def unit(i: Int) = () => {
+      if (i < 2) assert(done(i + 1).await(30, java.util.concurrent.TimeUnit.SECONDS))
+      done(i).countDown()
+      s"unit $i"
+    }
+    assert(Layout.inParallel((0 until 3).map(unit): _*) === Seq("unit 0", "unit 1", "unit 2"))
+  }
+
   test("compactBuckets: rewrites only overfull buckets; content, pinning, recovery intact") {
     val s = spark; import s.implicits._
     val name = "graft_compact_spec"

@@ -3,10 +3,11 @@ package graft
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Window}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.sources.RefSchemas
+import graft.sources.{HttpFetch, PaginatedJsonSource, RefSchemas}
 
 /** End-to-end pipeline spec: a stub challenge API (two CSVs + paginated
   * transactions with planted duplicates and dirty amounts) → Pipeline.run
@@ -132,6 +133,51 @@ class PipelineSpec extends SparkSpec {
           case leaves => fail(s"$t must read one landed RDD, got leaves $leaves:\n$plan")
         }
       }
+    }
+  }
+
+  test("every job run submits belongs to an SQL execution; transactions land off a parse, " +
+      "not a LocalRelation") {
+    serve { base =>
+      // the optimized plan of each table run lands (localCheckpoint)
+      val landed = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+      val onLanding = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint") landed.add(qe.optimizedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(onLanding)
+      val ids = try sqlExecutionIdsDuring(
+        Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1))
+      finally spark.listenerManager.unregister(onLanding)
+      assert(ids.nonEmpty && ids.forall(_.isDefined),
+        s"${ids.count(_.isEmpty)} of ${ids.size} jobs ran outside an SQL execution")
+      val tx = landed.toArray(Array.empty[LogicalPlan]).toSeq
+        .filter(_.output.map(_.name).contains("transaction_id"))
+      assert(tx.size === 1, s"expected one transactions landing, got ${tx.size}")
+      assert(tx.head.collectFirst { case l: LocalRelation => l }.isEmpty,
+        s"the transactions landing parses a driver-built LocalRelation:\n${tx.head}")
+    }
+  }
+
+  test("the pinned-schema parse of run equals cleanTransactions over the inferred parse") {
+    // a JSON-number amount, an unknown extra field, an element without
+    // `medium`, a dirty amount and a duplicate (timestamp, account_id) key
+    val feed = Seq(
+      """{"transaction_id": 1, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": 12.5, "type": "buy", "medium": "card", "note": "x"}""",
+      """{"transaction_id": 2, "timestamp": "2024-01-01 10:00:00", "account_id": 10, "amount": "9.99", "type": "buy", "medium": "card"}""",
+      """{"transaction_id": 3, "timestamp": "2024-01-02 11:00:00", "account_id": 11, "amount": "7.25", "type": "sell"}""",
+      """{"transaction_id": 4, "timestamp": "2024-01-03 12:00:00", "account_id": 12, "amount": "garbage", "type": "buy", "medium": "app"}""")
+    serveTx(feed) { base =>
+      val inferred = Pipeline.cleanTransactions(spark, PaginatedJsonSource.read(
+        spark, s"$base/transactions", new HttpFetch(), limit = 5, retrySleepMillis = 1))
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
+      val pinned = spark.table("transactions")
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      assert(pinned === inferred)
+      assert(pinned.map(r => (r.head, r(3).toString, r(5))) ===
+        Seq((1L, "12.50", "card"), (3L, "7.25", null), (4L, "0.00", "app")))
     }
   }
 

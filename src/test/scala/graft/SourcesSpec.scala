@@ -125,6 +125,33 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("readRaw: raw rows in page order across defaultParallelism partitions; no element is None") {
+    withServer(Map(
+      "/tx" -> { ex =>
+        val page = ex.getRequestURI.getQuery.split("&")
+          .find(_.startsWith("page=")).get.drop(5).toInt
+        (200, pageJson(page, 10, total = 25))
+      },
+      "/none" -> { _ => (200, """{"results": []}""") })) { base =>
+      val raw = PaginatedJsonSource.readRaw(spark, s"$base/tx", new HttpFetch(), limit = 10).get
+      val parallelism = spark.sparkContext.defaultParallelism
+      assert(raw.rdd.getNumPartitions === parallelism)
+      assert(raw.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) === parallelism)
+      val rows = raw.orderBy("arrival_idx").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(rows.map(_._1) === (0L until 25L)) // dense: page * limit + position
+      rows.foreach { case (i, json) =>
+        assert(json.startsWith(s"""{"transaction_id": $i,"""), s"row $i holds $json") }
+      // sized like a LocalRelation of the same rows, so joins still broadcast it
+      val s = spark; import s.implicits._
+      assert(raw.queryExecution.optimizedPlan.stats.sizeInBytes ===
+        rows.toDF("arrival_idx", "raw").queryExecution.optimizedPlan.stats.sizeInBytes)
+
+      assert(PaginatedJsonSource.readRaw(spark, s"$base/none", new HttpFetch(), limit = 10).isEmpty)
+      assert(PaginatedJsonSource.read(spark, s"$base/none", new HttpFetch(), limit = 10)
+        .schema.isEmpty)
+    }
+  }
+
   test("paginated source: 301-page/1000-row cap at reference cardinality") {
     // The reference's envelope (main.py:96-101): limit=1000, pages
     // 0..300 inclusive, terminate on short page OR page-count cap. This

@@ -39,7 +39,15 @@ abstract class SparkSpec extends AnyFunSuite {
     * job events asynchronously, so it is drained before the listener is
     * attached (earlier jobs must not count) and again before the count is
     * read; each wait is bounded, and a timeout fails the test. */
-  def jobsDuring(body: => Any): Int = {
+  def jobsDuring(body: => Any): Int = jobStartsDuring(body).size
+
+  /** The `spark.sql.execution.id` of each job submitted while `body` runs,
+    * as [[jobsDuring]] sees them; `None` for a job no SQL execution ran. */
+  def sqlExecutionIdsDuring(body: => Any): Seq[Option[String]] =
+    jobStartsDuring(body).map(e =>
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+
+  private def jobStartsDuring(body: => Any): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     def drain(): Unit = {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
@@ -47,14 +55,14 @@ abstract class SparkSpec extends AnyFunSuite {
       catch { case e: java.lang.reflect.InvocationTargetException =>
         fail("the listener bus did not drain within 30 s", e.getCause) }
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
     }
     drain()
     sc.addSparkListener(listener)
     try { body; drain() }
     finally sc.removeSparkListener(listener)
-    jobs.get
+    jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq
   }
 }
