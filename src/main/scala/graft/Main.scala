@@ -28,11 +28,13 @@ import org.apache.spark.sql.SparkSession
   *     is skipped and the views stay live on the engine itself — the
   *     engine IS the database here, so a missing warehouse is not an
   *     error the way a missing Postgres would be.
+  *     `GRAFT_JDBC_DRIVER` names the JDBC driver class when the URL
+  *     scheme alone does not resolve one.
   *   - `GRAFT_OUT_DIR`   — optional parquet lake landing for the three
   *     tables (the cluster-native alternative to the JDBC load).
-  *   - `GRAFT_CONNECTOR=dsv2` — route transactions ingest through the
-  *     DataSourceV2 paginated-HTTP connector (executor-parallel page
-  *     fetch) instead of the reference-shaped driver loop.
+  *
+  * Transactions are fetched by [[Pipeline.run]]'s one serial page loop,
+  * as the reference does (main.py:90-118).
   */
 object Main {
 
@@ -60,12 +62,7 @@ object Main {
     out(s"Database Name: ${env("DB_NAME").orNull}")
     out(s"API Base URL: ${env("API_BASE_URL").orNull}")
 
-    val base = env("API_BASE_URL").getOrElse("")
-    val token = env("ADMIN_API_KEY")
-    val result =
-      if (env("GRAFT_CONNECTOR").contains("dsv2"))
-        Pipeline.runWithConnector(spark, base, token)
-      else Pipeline.run(spark, base, token)
+    val result = Pipeline.run(spark, env("API_BASE_URL").getOrElse(""), env("ADMIN_API_KEY"))
 
     // the reference's load step (main.py:53): typed JDBC when a DB is
     // configured, parquet lake when a landing dir is, else live views

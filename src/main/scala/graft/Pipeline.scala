@@ -29,9 +29,11 @@ import graft.sources._
   *  - the tables are landed once (`Materialize.corpus`) before the views
   *    read them, as the reference loads Postgres before `CREATE VIEW`;
   *  - the three datasets are requested and landed concurrently (the
-  *    three endpoints are idempotent GETs; transaction pages stay
-  *    serial, in the reference's request order), and `saveTables`
-  *    writes its three tables concurrently;
+  *    three endpoints are idempotent GETs), and `saveTables` writes its
+  *    three tables concurrently. Transaction pages stay one serial
+  *    driver loop in the reference's request order, retrying the same
+  *    page and stopping at the first short page ([[PaginatedJsonSource]]);
+  *    only their parse runs on the executors;
   *  - ingest failures degrade to typed EMPTY relations (S4) and the
   *    pipeline still completes, like the reference.
   */
@@ -45,71 +47,43 @@ object Pipeline {
 
   /** Ingest + clean + land + register temp views (`accounts`, `clients`,
     * `transactions` + the three analytics views). Returns the counts.
+    * Each table is fetched and landed once, the three concurrently, so the
+    * counts, views and sink read landed rows instead of re-running ingest
+    * and dedup.
     */
   def run(spark: SparkSession, baseUrl: String, token: Option[String],
           limit: Int = 1000, maxPages: Int = 300,
-          retrySleepMillis: Long = 2000): Result =
-    load(spark, baseUrl, token) { fetch =>
-      val url = s"$baseUrl/transactions"
-      try PaginatedJsonSource.readRaw(spark, url, fetch, limit = limit,
-        maxPages = maxPages, retrySleepMillis = retrySleepMillis)
-        .fold(spark.emptyDataFrame)(parseTransactions)
-      catch { case NonFatal(e) => // S4, logged like CsvHttpSource.readOrEmpty
-        System.err.println(s"[graft] transactions ingest failed for $url: ${e.getMessage}")
-        spark.emptyDataFrame
-      }
-    }
+          retrySleepMillis: Long = 2000): Result = {
+    val fetch = new HttpFetch(bearerToken = token)
+    def csv(name: String, schema: StructType) = Materialize.corpus(
+      CsvHttpSource.readOrEmpty(spark, s"$baseUrl/download/$name.csv", schema, fetch))
+    val txUrl = s"$baseUrl/transactions"
+    val Seq(accounts, clients, transactions) = Layout.inParallel(
+      () => csv("accounts", RefSchemas.accounts),
+      () => csv("clients", RefSchemas.clients),
+      () => cleanTransactions(spark,
+        try PaginatedJsonSource.readRaw(spark, txUrl, fetch, limit = limit,
+          maxPages = maxPages, retrySleepMillis = retrySleepMillis)
+          .fold(spark.emptyDataFrame)(parseTransactions)
+        catch { case NonFatal(e) => // S4, logged like CsvHttpSource.readOrEmpty
+          System.err.println(s"[graft] transactions ingest failed for $txUrl: ${e.getMessage}")
+          spark.emptyDataFrame
+        }))
+    Seq("accounts" -> accounts, "clients" -> clients, "transactions" -> transactions)
+      .foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    createViews(spark)
+    counts(clients, accounts, transactions)
+  }
 
-  /** Scale variant of [[run]]: transactions ingest goes through the
-    * DataSourceV2 paginated-HTTP connector — executors fetch page
-    * ranges in parallel — instead of the driver-side loop. Same
-    * pinned-schema parse, cleaning, landing, views, and completion line.
-    */
-  def runWithConnector(spark: SparkSession, baseUrl: String, token: Option[String],
-                       limit: Int = 1000, maxPages: Int = 300): Result =
-    load(spark, baseUrl, token) { _ =>
-      val reader = spark.read
-        .format("graft.sources.v2.PaginatedHttpTableProvider")
-        .option("url", s"$baseUrl/transactions")
-        .option("pages", maxPages + 1)
-        .option("limit", limit)
-      parseTransactions(token.foldLeft(reader)((r, t) => r.option("token", t)).load())
-        // materialize ONE fetch pass: no later action may re-issue the HTTP
-        // page fetches (a live endpoint could change between actions).
-        // Deliberately LOCAL, never Materialize.corpus: recompute-on-loss
-        // would re-fetch a non-idempotent HTTP source, which is worse than
-        // failing — a cluster deployment replays from durable storage: the
-        // landing in cleanTransactions, reliable with a checkpoint dir.
-        .localCheckpoint()
-    }
-
-  /** Both flows' transactions parse: the `(arrival_idx, raw)` rows under
-    * the pinned schema with every field a string, typed by
+  /** The transactions parse: the `(arrival_idx, raw)` rows under the
+    * pinned schema with every field a string, typed by
     * `cleanTransactions` — one declarative parse, run by the executors. */
   private def parseTransactions(raw: DataFrame): DataFrame = {
     val txSchema = StructType(
       RefSchemas.transactions.fields.map(_.copy(dataType = StringType)))
     raw.select(col("arrival_idx"), from_json(col("raw"), txSchema).as("r"))
-      .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames
+      .select(col("arrival_idx") +: RefSchemas.transactions.fieldNames.toSeq
         .map(n => col(s"r.$n").as(n)): _*)
-  }
-
-  /** Both flows' body: each table is fetched and landed once, the three
-    * concurrently, so the counts, views and sink read landed rows instead
-    * of re-running ingest and dedup. */
-  private def load(spark: SparkSession, baseUrl: String, token: Option[String])(
-      readTransactions: HttpFetch => DataFrame): Result = {
-    val fetch = new HttpFetch(bearerToken = token)
-    def csv(name: String, schema: StructType) = Materialize.corpus(
-      CsvHttpSource.readOrEmpty(spark, s"$baseUrl/download/$name.csv", schema, fetch))
-    val Seq(accounts, clients, transactions) = Layout.inParallel(
-      () => csv("accounts", RefSchemas.accounts),
-      () => csv("clients", RefSchemas.clients),
-      () => cleanTransactions(spark, readTransactions(fetch)))
-    Seq("accounts" -> accounts, "clients" -> clients, "transactions" -> transactions)
-      .foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    createViews(spark)
-    counts(clients, accounts, transactions)
   }
 
   /** The three row counts in one aggregate over the union of the three
@@ -201,12 +175,10 @@ object Pipeline {
     */
   def saveTablesJdbc(spark: SparkSession, url: String,
       props: java.util.Properties, overwrite: Boolean = false,
-      numPartitions: Int = 8): Unit = {
-    JdbcSink.write(spark.table("accounts"), url, "accounts", props,
-      RefSchemas.accountsColumnTypes, overwrite, numPartitions)
-    JdbcSink.write(spark.table("clients"), url, "clients", props,
-      RefSchemas.clientsColumnTypes, overwrite, numPartitions)
-    JdbcSink.write(spark.table("transactions"), url, "transactions", props,
-      RefSchemas.transactionsColumnTypes, overwrite, numPartitions)
-  }
+      numPartitions: Int = 8): Unit =
+    Seq("accounts" -> RefSchemas.accountsColumnTypes,
+        "clients" -> RefSchemas.clientsColumnTypes,
+        "transactions" -> RefSchemas.transactionsColumnTypes).foreach { case (t, ddl) =>
+      JdbcSink.write(spark.table(t), url, t, props, ddl, overwrite, numPartitions)
+    }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 /** HTTP CSV ingestion (SURVEY.md S1/S2, main.py:62-87): one driver-side
   * GET (the reference's CSVs are single small files — accounts/clients),
   * then `spark.read.csv` over a `Dataset[String]` of the lines with
-  * header + either an explicit pinned schema or inference. The dataset
+  * header and the caller's pinned schema. The dataset
   * route (not a driver-local temp file) keeps the parse cluster-safe —
   * executors can't read the driver's /tmp on a real deployment.
   * Records split quote-aware (RFC 4180): a newline inside a
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.StructType
   */
 object CsvHttpSource {
 
-  def read(spark: SparkSession, url: String, schema: Option[StructType],
+  def read(spark: SparkSession, url: String, schema: StructType,
            fetch: HttpFetch): DataFrame = {
     import spark.implicits._
     val text = fetch.getString(url)
@@ -37,11 +37,7 @@ object CsvHttpSource {
     // inside a quoted field ("y ""q""" → y "q"). Spark's univocity
     // parser defaults to backslash-escape, which would leave the
     // doubled quotes in the parsed value.
-    val reader = spark.read.option("header", "true").option("escape", "\"")
-    schema match {
-      case Some(s) => reader.schema(s).csv(lines)
-      case None    => reader.option("inferSchema", "true").csv(lines)
-    }
+    spark.read.option("header", "true").option("escape", "\"").schema(schema).csv(lines)
   }
 
   /** RFC 4180 record split: a newline terminates a record only OUTSIDE
@@ -91,7 +87,7 @@ object CsvHttpSource {
     */
   def readOrEmpty(spark: SparkSession, url: String, schema: StructType,
                   fetch: HttpFetch): DataFrame =
-    Try(read(spark, url, Some(schema), fetch)) match {
+    Try(read(spark, url, schema, fetch)) match {
       case Success(df) => df
       case Failure(e) =>
         System.err.println(s"[graft] csv ingest failed for $url: ${e.getMessage}")

@@ -1,45 +1,22 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
 
 /** Typed JDBC sink surface (SURVEY.md K1-K3, main.py:139-179): append /
   * overwrite with explicit column-type DDL, mirroring pandas
-  * `to_sql(..., if_exists=..., dtype=map)`.
+  * `to_sql(..., if_exists=..., dtype=map)`. The DDL is the hand-pinned
+  * [[RefSchemas]] `*ColumnTypes` fragments.
   *
-  * The DDL derivation and mode mapping are pure functions with their
-  * own specs; the live `.jdbc()` path itself is executed end-to-end
-  * against embedded Derby (real CREATE TABLE + INSERTs + read-back,
-  * append and overwrite) in PipelineSpec — no Postgres in the build
-  * environment, but the writer path is the same for any JDBC target.
+  * The live `.jdbc()` path is executed end-to-end against embedded Derby
+  * (real CREATE TABLE + INSERTs + read-back, append and overwrite) in
+  * PipelineSpec — no Postgres in the build environment, but the writer
+  * path is the same for any JDBC target.
   *
   * Scale note: `.jdbc` writes one connection per partition;
   * `numPartitions`/`batchsize` bound the fan-in so a 1000-executor
   * write can't exhaust the database's connection pool.
   */
 object JdbcSink {
-
-  /** Derive a `createTableColumnTypes` DDL fragment from a schema +
-    * per-column varchar widths (Spark's default for StringType is TEXT;
-    * the reference pins widths — main.py:143, 152-154, 168-169).
-    */
-  def columnTypesDdl(schema: StructType, varcharWidths: Map[String, Int]): String =
-    schema.fields.map { f =>
-      val t = f.dataType match {
-        case StringType =>
-          varcharWidths.get(f.name).map(w => s"VARCHAR($w)").getOrElse("TEXT")
-        case LongType            => "BIGINT"
-        case IntegerType         => "INTEGER"
-        case d: DecimalType      => s"DECIMAL(${d.precision},${d.scale})"
-        case TimestampType       => "TIMESTAMP"
-        case DateType            => "DATE"
-        case DoubleType          => "DOUBLE PRECISION"
-        case BooleanType         => "BOOLEAN"
-        case other => throw new IllegalArgumentException(
-          s"no JDBC mapping for column ${f.name}: $other")
-      }
-      s"${f.name} $t"
-    }.mkString(", ")
 
   /** K1 (append) / K2 (overwrite): write with pinned column types. */
   def write(df: DataFrame, url: String, table: String,

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a page returns fewer than `limit` rows; on a fetch error sleep and
   * retry the SAME page (the reference does not advance the page on the
   * error path — main.py:113-116 — but retries are bounded here where
-  * the reference loops forever).
+  * the reference loops forever). A malformed request (a URL without a
+  * scheme, say) is not retried: no attempt at it can succeed.
   *
   * Each page body is `{"results": [...]}` (fallback: a bare array).
   * Rows get a dense `arrival_idx` = page·limit + position-in-page — the
@@ -26,10 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * This form is behaviorally exact w.r.t. the reference: it fetches the
   * pages one after another on the driver, then hands the raw elements
   * to the executors, which parse them ([[readRaw]] spreads the rows over
-  * `defaultParallelism` partitions). The scale path is the DataSourceV2
-  * connector ([[graft.sources.v2.PaginatedHttpTableProvider]]): page
-  * ranges become input partitions fetched BY EXECUTORS in parallel, and
-  * this class's per-page logic is shared as the page decoder.
+  * `defaultParallelism` partitions).
   */
 object PaginatedJsonSource {
 
@@ -86,6 +84,7 @@ object PaginatedJsonSource {
   def readRaw(spark: SparkSession, baseUrl: String, fetch: HttpFetch,
               limit: Int = 1000, maxPages: Int = 300,
               maxRetriesPerPage: Int = 5, retrySleepMillis: Long = 2000): Option[DataFrame] = {
+    require(maxRetriesPerPage >= 0, s"maxRetriesPerPage must be >= 0, got $maxRetriesPerPage")
     val pages = Seq.newBuilder[(Long, String)] // (arrival_idx, raw json element)
     var page = 0
     var continue = true
@@ -95,12 +94,10 @@ object PaginatedJsonSource {
       while (fetched.isEmpty) {
         Try(fetch.getString(s"$baseUrl?page=$page&limit=$limit")) match {
           case Success(body) => fetched = Some(pageElements(body))
+          case Failure(e: IllegalArgumentException) => throw e // a malformed request: no retry can succeed
           case Failure(e) =>
             attempts += 1
-            // maxRetriesPerPage < 0 = retry forever — strict parity with
-            // the reference's unbounded loop (main.py:113-116); the
-            // bounded default is a deliberate improvement
-            if (maxRetriesPerPage >= 0 && attempts > maxRetriesPerPage)
+            if (attempts > maxRetriesPerPage)
               throw new RuntimeException(
                 s"page $page failed after $maxRetriesPerPage retries", e)
             Thread.sleep(retrySleepMillis) // retry SAME page (main.py:113-116)

@@ -92,29 +92,13 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("DSv2-connector pipeline variant matches the driver-side pipeline") {
-    serve { base =>
-      val r1 = Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
-      val views1 = views.map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
-      val r2 = Pipeline.runWithConnector(spark, base, Some("tok"), limit = 5)
-      val views2 = views.map(v => spark.sql(s"SELECT * FROM $v").collect().toSeq)
-      assert(r2 === r1)
-      assert(views2 === views1)
-    }
-  }
-
-  test("empty first transactions page: both flows complete with three empty views") {
+  test("empty first transactions page: run completes with three empty views") {
     serveTx(Seq.empty) { base =>
-      val flows = Seq[(String, () => Pipeline.Result)](
-        "run" -> (() => Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)),
-        "runWithConnector" -> (() => Pipeline.runWithConnector(spark, base, Some("tok"), limit = 5)))
-      flows.foreach { case (name, flow) =>
-        val r = flow()
-        assert(r.completionLine === "ZYLYTY Data Import Completed [3, 4, 0]", name)
-        assert(spark.table("transactions").columns.toSeq ===
-          RefSchemas.transactions.fieldNames.toSeq, name)
-        views.foreach(v => assert(spark.table(v).count() === 0, s"$name: $v must be empty"))
-      }
+      val r = Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
+      assert(r.completionLine === "ZYLYTY Data Import Completed [3, 4, 0]")
+      assert(spark.table("transactions").columns.toSeq ===
+        RefSchemas.transactions.fieldNames.toSeq)
+      views.foreach(v => assert(spark.table(v).count() === 0, s"$v must be empty"))
     }
   }
 
@@ -288,6 +272,15 @@ class PipelineSpec extends SparkSpec {
       // the completion line is the LAST thing printed (main.py:58)
       assert(lines.last === "ZYLYTY Data Import Completed [3, 4, 6]")
     }
+  }
+
+  test("graft.Main entrypoint: no API_BASE_URL degrades every ingest to the " +
+      "S4 fallback and still completes") {
+    val lines = scala.collection.mutable.ArrayBuffer[String]()
+    val r = Main.run(spark, Map.empty[String, String].get, lines += _)
+    assert(r === Pipeline.Result(0, 0, 0))
+    assert(lines.contains("API Base URL: null"))
+    assert(lines.last === "ZYLYTY Data Import Completed [0, 0, 0]")
   }
 
   test("graft.Main entrypoint: DB_* env routes the load through the live " +

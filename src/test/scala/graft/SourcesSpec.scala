@@ -12,7 +12,7 @@ import graft.sources._
 /** Ingest-layer specs against a real in-JVM HTTP server — exercises the
   * reference semantics end-to-end: Bearer auth, CSV pinned schemas,
   * empty-relation fallback, pagination termination, retry-same-page,
-  * arrival_idx assignment, and the DSv2 page-range connector.
+  * no retry of a malformed request, and arrival_idx assignment.
   */
 class SourcesSpec extends SparkSpec {
 
@@ -48,7 +48,7 @@ class SourcesSpec extends SparkSpec {
       (200, "account_id,client_id\n1,c1\n2,c2\n")
     })) { base =>
       val df = CsvHttpSource.read(spark, s"$base/download/accounts.csv",
-        Some(RefSchemas.accounts), new HttpFetch(bearerToken = Some("tok123")))
+        RefSchemas.accounts, new HttpFetch(bearerToken = Some("tok123")))
       assert(seenAuth.get() === "Bearer tok123")
       assert(df.schema === RefSchemas.accounts)
       assert(df.orderBy("account_id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
@@ -65,7 +65,7 @@ class SourcesSpec extends SparkSpec {
       val schema = StructType(Seq(
         StructField("client_id", StringType), StructField("address", StringType)))
       val df = CsvHttpSource.read(spark, s"$base/clients.csv",
-        Some(schema), new HttpFetch())
+        schema, new HttpFetch())
       val rows = df.orderBy("client_id").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq
       assert(rows === Seq(("c1", "12 Main St\nApt 4"), ("c2", "plain")))
@@ -81,7 +81,7 @@ class SourcesSpec extends SparkSpec {
     withServer(Map("/q.csv" -> { _ => (200, csv) })) { base =>
       val schema = StructType(Seq(
         StructField("client_id", StringType), StructField("desc", StringType)))
-      val df = CsvHttpSource.read(spark, s"$base/q.csv", Some(schema), new HttpFetch())
+      val df = CsvHttpSource.read(spark, s"$base/q.csv", schema, new HttpFetch())
       val rows = df.orderBy("client_id").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq
       assert(rows === Seq(("c1", "y \"q\""), ("c2", "a\nb \"x\" c")))
@@ -200,6 +200,22 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("paginated source: a malformed request is tried once, not retried") {
+    // no API_BASE_URL leaves a scheme-less URL; HttpRequest rejects it with
+    // IllegalArgumentException, which no retry can cure
+    val calls = new AtomicInteger(0)
+    val fetch = new HttpFetch() {
+      override def getString(url: String): String = {
+        calls.incrementAndGet()
+        super.getString(url)
+      }
+    }
+    intercept[IllegalArgumentException] {
+      PaginatedJsonSource.readRaw(spark, "/transactions", fetch, retrySleepMillis = 1)
+    }
+    assert(calls.get() === 1)
+  }
+
   test("pageElements handles nesting, escapes, bare arrays, and scalars") {
     assert(PaginatedJsonSource.pageElements("""{"results": []}""") === Seq.empty)
     assert(PaginatedJsonSource.pageElements(
@@ -211,41 +227,5 @@ class SourcesSpec extends SparkSpec {
       === Seq("1", "2", "3"))
     assert(PaginatedJsonSource.pageElements("""{"results": ["a,b", true, null]}""")
       === Seq("\"a,b\"", "true", "null"))
-  }
-
-  test("DSv2 connector: page ranges fetched by executors, parsed declaratively") {
-    withServer(Map("/v2" -> { ex =>
-      val page = ex.getRequestURI.getQuery.split("&")
-        .find(_.startsWith("page=")).get.drop(5).toInt
-      (200, pageJson(page, 10, total = 37))
-    })) { base =>
-      val raw = spark.read
-        .format("graft.sources.v2.PaginatedHttpTableProvider")
-        .option("url", s"$base/v2")
-        .option("pages", 300).option("limit", 10)
-        .option("pagesPerPartition", 2)
-        .load()
-      val parsed = raw.select(col("arrival_idx"),
-          from_json(col("raw"), StructType(Seq(
-            StructField("transaction_id", LongType),
-            StructField("amount", StringType)))).as("r"))
-        .select(col("arrival_idx"), col("r.transaction_id"), col("r.amount"))
-      assert(parsed.count() === 37)
-      val ids = parsed.orderBy("arrival_idx").select("transaction_id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(ids === (0L until 37L))
-      // multiple input partitions actually planned
-      assert(raw.rdd.getNumPartitions > 1)
-    }
-  }
-
-  test("JdbcSink.columnTypesDdl reproduces the reference's pinned types") {
-    assert(JdbcSink.columnTypesDdl(RefSchemas.transactions,
-      Map("type" -> 5, "medium" -> 10)) === RefSchemas.transactionsColumnTypes)
-    assert(JdbcSink.columnTypesDdl(RefSchemas.clients,
-      Map("client_id" -> 50, "client_name" -> 50, "client_email" -> 40))
-      === RefSchemas.clientsColumnTypes)
-    assert(JdbcSink.columnTypesDdl(RefSchemas.accounts,
-      Map("client_id" -> 50)) === RefSchemas.accountsColumnTypes)
   }
 }
