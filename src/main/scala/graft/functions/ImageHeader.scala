@@ -1,28 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Header parse of an image payload — REAL metadata decode for the
-  * formats the JDK itself covers, as a native codegen'd expression so
-  * metadata extraction over a 100 TB payload column runs inside the
-  * scan's whole-stage-codegen, touching only the LEADING BYTES of each
-  * payload (never a full pixel decode — a header query must not pay
-  * codec cost). Raster formats (uncompressed BMP, binary netpbm P5/P6)
-  * carry pixel geometry for direct sampling; codec formats (PNG, JPEG,
-  * GIF — all readable by `javax.imageio` in a bare JDK, no external
-  * codecs) are header-parsed here and pixel-decoded lazily by
+  * formats the JDK itself covers, reading only the LEADING BYTES of
+  * each payload (never a full pixel decode — a header parse must not
+  * pay codec cost). Raster formats (uncompressed BMP, binary netpbm
+  * P5/P6) carry pixel geometry for direct sampling; codec formats (PNG,
+  * JPEG, GIF — all readable by `javax.imageio` in a bare JDK, no
+  * external codecs) are header-parsed here and pixel-decoded lazily by
   * [[ImageHeader.decodeGridFeatures]] only where features are asked
-  * for. Returns `struct(format, width, height, channels)`, or NULL
+  * for. [[ImageHeader.parse]] returns the format and geometry, or null
   * when the payload is none of the recognized formats (callers fall
-  * back to the md5 stub — MultimodalOps scaladoc).
+  * back to the md5 stub or drop the payload — MultimodalOps scaladoc).
   *
   * Format notes (public file-format specs, not codec work):
   *  - BMP: little-endian BITMAPINFOHEADER — pixel offset at byte 10,
@@ -40,39 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The raster parsers validate that the declared raster actually fits
   * in the payload — truncated files are unrecognized, not garbage rows.
   */
-case class ImageHeader(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a binary argument, got $t")
-    }
-
-  override def dataType: DataType = ImageHeader.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_header"
-
-  override protected def nullSafeEval(input: Any): Any =
-    ImageHeader.parseToRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImageHeader.parseToRow($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageHeader =
-    copy(child = newChild)
-}
-
 object ImageHeader {
-
-  val schema: StructType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false)))
 
   /** Parsed geometry of a recognized payload. `dataOffset`/`rowStride`/
     * `bottomUp` locate raw pixels for [[luminance]]; `bgr` marks BMP's
@@ -102,9 +58,8 @@ object ImageHeader {
   javax.imageio.ImageIO.setUseCache(false)
 
   /** Parse a payload's image header; null when not a recognized format
-    * (the stub-fallback signal). Shared by the interpreted eval, the
-    * generated code, and the pixel-feature extractor's mapPartitions
-    * loop.
+    * (the stub-fallback signal). Called per payload inside the feature
+    * extractors' mapPartitions loops.
     */
   def parse(b: Array[Byte]): Info = {
     val bmp = parseBmp(b)
@@ -308,16 +263,4 @@ object ImageHeader {
         (rgb & 0xff) * 114) / 1000
     }
   }
-
-  /** Shared by interpreted eval and generated code. */
-  def parseToRow(bytes: Array[Byte]): InternalRow = {
-    val info = parse(bytes)
-    if (info == null) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](UTF8String.fromString(info.format),
-        info.width, info.height, info.channels))
-  }
-
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(ImageHeader(GraftColumnBridge.expression(c)))
 }

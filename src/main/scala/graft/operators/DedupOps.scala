@@ -372,32 +372,6 @@ object DedupOps {
       .join(spark.table(name).select(col("key_hash")), Seq("key_hash"), "left_anti")
       .select(col("doc_id"), col("key_hash"))
 
-  /** Bootstrap an EMPTY survivor index — the state before day one of
-    * the incremental loop (batch or streaming). */
-  def initDedupIndex(spark: SparkSession, name: String): Unit =
-    Layout.ensureTable(spark, name) { n =>
-      import org.apache.spark.sql.types._
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("key_hash", StringType),
-          StructField("doc_id", LongType))))
-      Layout.writeBucketed(empty, n, "key_hash", DedupIndexBuckets)
-    }
-
-  /** The WRITE half of the daily dedup loop: append a processed batch's
-    * surviving keys to the index. The append uses the index's own
-    * bucket spec, so new files land in the same bucket layout and
-    * every later probe stays co-located — the index grows by one
-    * narrow row per new distinct document per day, never rewritten.
-    * DedupOpsSpec proves the three-batch loop (bootstrap → dedup+append
-    * → dedup+append) reproduces full-corpus dedup exactly.
-    */
-  def appendToDedupIndex(name: String, survivors: DataFrame): Unit =
-    survivors.select(col("key_hash"), col("doc_id"))
-      .write.format("parquet")
-      .bucketBy(DedupIndexBuckets, "key_hash").sortBy("key_hash")
-      .mode("append").saveAsTable(name)
-
   /** Incremental cross-batch dedup — dedup the NEW batch against the
     * persisted survivor index WITHOUT re-scanning the old corpus:
     * within-batch keep-first (one shuffle on the content hash), then a
@@ -666,13 +640,10 @@ object DedupOps {
     * query. Keyed by the epoch base name (corpus tag); a corpus append
     * rotates the epoch through [[Layout.rotateEpoch]], which never
     * touches rejected corpora, so the only staleness is a corpus edited
-    * in place under the same sfDir — tests clear via
-    * [[clearShingleGateMemo]].
+    * in place under the same sfDir.
     */
   private val shingleGateRejected =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[graft] def clearShingleGateMemo(): Unit = shingleGateRejected.clear()
 
   def ensureShingleIndex(spark: SparkSession, sfDir: String): Option[String] = {
     Layout.pinBucketedReads(spark)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Storage-layout and shuffle-shaping utilities — the techniques that
   * decide whether a 100 TB join is one pass or a meltdown:
@@ -495,191 +494,4 @@ object Layout {
       clearStaleTableLocation(spark, n)
     }
   }
-
-  /** Rewrite a bucketed table with the same bucket spec — the
-    * small-files compaction an append-maintained index needs
-    * periodically (every `mode("append")` lands one new file per
-    * non-empty bucket per batch; after N appends each bucket is N
-    * files and scan/open overhead grows linearly).
-    *
-    * Crash-safe ordering: the compacted copy is written DURABLY to a
-    * side table first, and only then does the original drop and the
-    * side table rename into its place — at every instant at least one
-    * complete on-disk copy of the index exists (a failure between the
-    * drop and the rename leaves the data recoverable under
-    * `<table>_compacting`). Never delete-then-rewrite state you cannot
-    * rebuild. Content and bucket layout are unchanged — spec-asserted
-    * along with the file-count drop.
-    *
-    * Recovery scope, stated precisely: the `_compacting` copy protects
-    * WITHIN-process failures, and its recovery after a process crash is
-    * MANUAL (inspect the warehouse before re-running; the first
-    * post-restart [[ensureTable]]/compaction call would otherwise
-    * rebuild from source or clear the leftover). Under the default
-    * in-memory catalog ALL index tables are per-process state anyway —
-    * the catalog forgets them at session end and builders re-derive
-    * them from source. Append-maintained state that must survive
-    * restarts (initDedupIndex + appendToDedupIndex loops) needs a
-    * persistent metastore (Hive) in production; the write/swap
-    * ordering here is what makes that deployment safe.
-    *
-    * Concurrency scope: between the DROP and the RENAME no table exists
-    * under the original name — a concurrent reader (or a queued job in
-    * the same session) planning against the index in that window fails
-    * with table-not-found. Acceptable for this single-session library;
-    * a deployment with concurrent readers wants [[compactBuckets]]
-    * (which swaps files under an unchanged catalog entry) or an epoch
-    * rotation (which never unpublishes).
-    */
-  def compactBucketed(spark: SparkSession, table: String, key: String, buckets: Int): Unit = {
-    val tmp = table + "_compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    clearStaleTableLocation(spark, tmp)
-    writeBucketed(spark.table(table), tmp, key, buckets)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    clearStaleTableLocation(spark, table)
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-  }
-
-  /** Bucket id of one data file of a bucketed table, parsed from the
-    * file name the same way Spark's scan does (`part-…_00003.c000…` →
-    * bucket 3): the trailing `_<digits>` before the extensions.
-    */
-  private[graft] def bucketIdOf(fileName: String): Option[Int] = {
-    val p = """.*_(\d+)(?:\..*)?$""".r
-    fileName match { case p(b) => Some(b.toInt); case _ => None }
-  }
-
-  /** Incremental per-bucket compaction — the maintenance pass an
-    * append-maintained bucketed index actually wants. [[compactBucketed]]
-    * rewrites the WHOLE table through a side table: O(table) IO per
-    * maintenance call even when one day's appends touched three buckets.
-    * This variant rewrites ONLY buckets whose file count exceeds
-    * `maxFilesPerBucket`, each as its own small job through
-    * [[inParallel]] — IO is O(overfull buckets), and buckets already
-    * compact keep their exact files (spec-asserted by file listing).
-    *
-    * Mechanics: a bucket's rows are read from its own files, sorted by
-    * `key` (restoring the one-file-per-bucket sorted layout the writer
-    * produced), and written as ONE file whose name carries the bucket id
-    * suffix Spark's scan parses — so the table's bucket contract is
-    * preserved without touching the catalog entry (no drop, no rename:
-    * concurrent readers of OTHER buckets never see a missing table).
-    *
-    * Crash-safety — at every instant each bucket's full content exists
-    * on disk at least once:
-    *  1. the compacted file is written DURABLY under `<loc>/.compact/`
-    *     (dot-dirs are invisible to Spark's file listing);
-    *  2. the bucket's old files are deleted;
-    *  3. the staged file moves into the table directory.
-    * A crash leaves either the old files (before 2), or the staged copy
-    * (between 2 and 3) — and the staged copy is always a complete,
-    * newer-or-equal replacement, so recovery is deterministic: the next
-    * call REPLAYS any leftover staging first (delete that bucket's live
-    * files, move the staged file in). No appends may run concurrently
-    * with compaction (single-writer, like the append path itself).
-    */
-  def compactBuckets(spark: SparkSession, table: String, key: String,
-      maxFilesPerBucket: Int = 1): Unit = {
-    val loc = tableLocation(spark, table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(loc, ".compact")
-
-    // every VISIBLE file is table data (this is exactly Spark's listing
-    // rule) — matching only `part-*` would miss files a previous
-    // compaction installed and silently drop their rows from the rewrite
-    def liveFiles(): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(loc).toSeq.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }
-
-    // recovery replay: a staged file is the authoritative full content of
-    // its bucket (invariant 1-3 above) — finish the interrupted swap.
-    // Runs before compaction (process-crash leftovers) AND on the way out
-    // (a mid-swap exception must complete, not discard, staged buckets).
-    def replayStaging(): Unit =
-      if (fs.exists(staging)) {
-        // skip hidden files: the checksum FS keeps `.<name>.crc` beside
-        // each staged file, and installing one as table data would
-        // corrupt the bucket it names
-        fs.listStatus(staging).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith(".") && !n.startsWith("_")
-        }.foreach { st =>
-          bucketIdOf(st.getPath.getName).foreach { b =>
-            liveFiles().filter(f => bucketIdOf(f.getPath.getName).contains(b))
-              .foreach(f => fs.delete(f.getPath, false))
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(loc, st.getPath.getName))
-          }
-        }
-        spark.sql(s"REFRESH TABLE $table")
-      }
-    replayStaging()
-
-    val byBucket = liveFiles().groupBy(f => bucketIdOf(f.getPath.getName).getOrElse(-1))
-    val overfull = byBucket.filter { case (b, fls) => b >= 0 && fls.size > maxFilesPerBucket }
-    if (overfull.isEmpty) return
-    fs.mkdirs(staging)
-
-    // inParallel settles every bucket job before rethrowing, so the
-    // finally below never replays or deletes `.compact/` under a sibling
-    // job that is still writing into it
-    try {
-      inParallel(overfull.toSeq.map[() => Unit] { case (b, fls) => () => {
-        // one tiny job per bucket: its files → one sorted file
-        val df = spark.read.parquet(fls.map(_.getPath.toString): _*)
-        val jobDir = new org.apache.hadoop.fs.Path(staging, s"job_$b")
-        df.coalesce(1).sortWithinPartitions(col(key))
-          .write.mode("overwrite").parquet(jobDir.toString)
-        val part = fs.listStatus(jobDir).toSeq
-          .find(f => f.isFile && f.getPath.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no output file for bucket $b of $table"))
-        // stage DURABLY under the bucket-id name Spark's scan parses;
-        // unique per run so a re-compaction never collides with the
-        // file an earlier compaction installed
-        val staged = new org.apache.hadoop.fs.Path(staging,
-          f"compact-${java.util.UUID.randomUUID}%s_$b%05d.c000.snappy.parquet")
-        fs.rename(part.getPath, staged)
-        fs.delete(jobDir, true)
-        // swap: delete old files, then move the staged file live
-        fls.foreach(f => fs.delete(f.getPath, false))
-        fs.rename(staged, new org.apache.hadoop.fs.Path(loc, staged.getName))
-      }}: _*)
-    } finally {
-      replayStaging() // no-op on success; completes any mid-swap bucket
-      fs.delete(staging, true)
-      spark.sql(s"REFRESH TABLE $table")
-    }
-  }
-
-  /** Inner equi-join of a skewed fact table against a dimension with
-    * key salting. Results are identical to `fact.join(dim, key)` —
-    * every fact row matches exactly one replicated dim row (the one
-    * sharing its salt). The salt is a deterministic hash of the whole
-    * fact row, so the operator stays reproducible.
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salt: Int): DataFrame = {
-    val factSalted = fact.withColumn("__salt",
-      pmod(xxhash64(fact.columns.map(col): _*), lit(salt.toLong)))
-    val dimSalted = dim.withColumn("__salt",
-      explode(sequence(lit(0L), lit(salt.toLong - 1))))
-    factSalted.join(dimSalted, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Hive-style partitioned write — the third layout lever beside
-    * bucketing and salting: `partitionBy(col)` turns a predicate on the
-    * partition column into DIRECTORY pruning, so a scan filtered to one
-    * partition value never opens the other partitions' files at all
-    * (`PartitionFilters` in the plan, asserted by LayoutSpec). At
-    * 100 TB this is the difference between reading one day/language
-    * shard and reading the lake; low-cardinality columns only — a
-    * high-cardinality partition key produces millions of tiny files.
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write
-      .format("parquet")
-      .partitionBy(partitionCol)
-      .mode("overwrite")
-      .save(path)
 }

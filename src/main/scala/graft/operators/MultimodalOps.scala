@@ -12,21 +12,19 @@ import Materialize.CorpusSyntax
   * batch-local inside the executors via `mapPartitions` — never a
   * driver round-trip.
   *
-  * Image decode is REAL for every format the bare JDK covers: header
-  * metadata for BMP/PPM/PGM/PNG/JPEG/GIF via the codegen'd
-  * [[graft.functions.ImageHeader]] expression (leading bytes only —
-  * a metadata query never pays codec cost), raw-raster pixel sampling
-  * for BMP/PPM/PGM, and a full `javax.imageio` pixel decode for
-  * PNG/JPEG/GIF in the feature path. The deterministic md5 STUB
-  * ([[decodeImageStub]]/[[stubFeature]]) remains only for payloads no
-  * JDK can decode (video, exotic codecs, corrupt bytes) — degrade,
-  * don't throw, mid-100-TB-job. The parts that matter at scale are
-  * real and tested either way: the schema contract (payload + metadata
-  * struct), the partition-local batch shape, and the scan-level
-  * behavior (payload bytes are only read when the decode column is
-  * referenced — parquet column pruning drops them otherwise, which is
-  * why payloads must live in their own column, not inside a struct
-  * with hot metadata).
+  * Image decode is REAL for every format the bare JDK covers: the
+  * [[graft.functions.ImageHeader]] parser reads header metadata for
+  * BMP/PPM/PGM/PNG/JPEG/GIF from the leading bytes, raw-raster pixel
+  * sampling covers BMP/PPM/PGM, and a full `javax.imageio` pixel decode
+  * covers PNG/JPEG/GIF in the feature path. The deterministic md5 STUB
+  * ([[stubFeature]]) remains only for payloads no JDK can decode (video,
+  * exotic codecs, corrupt bytes) — degrade, don't throw,
+  * mid-100-TB-job. The parts that matter at scale are real and tested
+  * either way: the schema contract (payload + metadata struct), the
+  * partition-local batch shape, and the scan-level behavior (payload
+  * bytes are only read when the decode column is referenced — parquet
+  * column pruning drops them otherwise, which is why payloads must live
+  * in their own column, not inside a struct with hot metadata).
   */
 object MultimodalOps {
 
@@ -51,75 +49,17 @@ object MultimodalOps {
       |FROM documents
       |ORDER BY doc_id""".stripMargin
 
-  /** Decoded-image metadata record (what a real decoder would emit). */
-  case class ImageMeta(doc_id: Long, width: Int, height: Int,
-                       channels: Int, n_pixels: Long)
-
-  /** STUB image decode: a real pipeline calls an image codec here
-    * (per-partition, reusing a decoder instance across the batch); this
-    * container has none, so dimensions are derived deterministically
-    * from the payload's leading bytes. The mapPartitions shape — typed
-    * iterator in, typed iterator out, no per-row driver interaction,
-    * schema known statically — is exactly the production pattern.
-    */
-  def decodeImageStub(payloads: DataFrame): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // (a real decoder would be instantiated once per partition here)
-        it.map { case (id, bytes) =>
-          val b0 = if (bytes.nonEmpty) bytes(0) & 0xff else 0
-          val b1 = if (bytes.length > 1) bytes(1) & 0xff else 0
-          val w = 16 + (b0 % 64)
-          val h = 16 + (b1 % 64)
-          ImageMeta(id, w, h, 3, w.toLong * h * 3)
-        }
-      }
-      .toDF()
-  }
-
-  /** REAL image metadata decode — uncompressed BMP, binary netpbm
-    * (P5/P6), PNG, JPEG, and GIF — via the native codegen'd
-    * [[graft.functions.ImageHeader]] expression, with the deterministic
-    * stub as the fallback for unrecognized payloads. Fully declarative:
-    * header metadata extraction over a 100 TB payload column stays
-    * inside whole-stage codegen reading only leading bytes (no pixel
-    * decode on the metadata path), and the stub's byte arithmetic is
-    * plain SQL functions — no UDF on either path.
-    */
-  def decodeImage(payloads: DataFrame): DataFrame = {
-    import graft.functions.ImageHeader
-    // the stub path's dims, as declarative byte arithmetic (same formula
-    // as decodeImageStub: leading two bytes mod 64, floor 16)
-    def byteAt(i: Int) = coalesce(
-      conv(hex(substring(col("payload"), i, 1)), 16, 10).cast("int"), lit(0))
-    val h = ImageHeader(col("payload"))
-    payloads
-      .select(col("doc_id").cast("long").as("doc_id"), col("payload"), h.as("h"))
-      .select(
-        col("doc_id"),
-        coalesce(col("h.format"), lit("stub")).as("format"),
-        coalesce(col("h.width"), lit(16) + byteAt(1) % 64).as("width"),
-        coalesce(col("h.height"), lit(16) + byteAt(2) % 64).as("height"),
-        coalesce(col("h.channels"), lit(3)).as("channels"))
-      .withColumn("n_pixels",
-        col("width").cast("long") * col("height") * col("channels"))
-  }
-
   /** Feature extraction with REAL pixels when the payload decodes —
     * direct raster sampling for BMP/PPM/PGM, a full `javax.imageio`
     * decode for PNG/JPEG/GIF
     * ([[graft.functions.ImageHeader.decodeGridFeatures]] — a
     * downsampled luminance grid, the classic pixel-intensity
-    * embedding) — and the md5 stub only for payloads no JDK codec
-    * accepts. Same mapPartitions shape and output contract as
-    * [[extractFeaturesStub]], so the ANN/dedup operators downstream are
-    * oblivious to which path produced a vector. No GATED key rides the
-    * stub anymore: [[multimodalAnn]] decodes a mixed PNG/WAV corpus
-    * through [[decodeMixedFeatures]], which drops (never stubs)
+    * embedding) — and the md5 [[stubFeature]] only for payloads no JDK
+    * codec accepts. Output is (`item_id`, `feature: array<float>` of
+    * static length `dim`) whichever path produced a vector, so the
+    * ANN/dedup operators downstream are oblivious to it. No GATED key
+    * rides the stub anymore: [[multimodalAnn]] decodes a mixed PNG/WAV
+    * corpus through [[decodeMixedFeatures]], which drops (never stubs)
     * undecodable payloads.
     */
   def extractImageFeatures(payloads: DataFrame, dim: Int = 64): DataFrame = {
@@ -142,47 +82,11 @@ object MultimodalOps {
       .toDF("item_id", "feature")
   }
 
-  /** Frame-sample plumbing: given per-item frame counts, emit (item,
-    * frame_idx) rows for every k-th frame — the explode-side of a video
-    * pipeline (decode of each sampled frame would follow per partition).
-    */
-  def sampleFrames(df: DataFrame, frameCountCol: String, every: Int): DataFrame =
-    df.withColumn("frame_idx",
-      // zero-frame items contribute NO rows (explode drops empty arrays)
-      explode(when(col(frameCountCol) > 0,
-        sequence(lit(0), col(frameCountCol) - 1, lit(every)))
-        .otherwise(array())))
-
-  /** STUB feature extraction: payload bytes → fixed-`dim` float vector,
-    * the shape that feeds [[SimilarityOps]]' ANN/dedup operators. A real
-    * pipeline loads a vision/audio encoder ONCE per partition and runs
-    * batched inference over the iterator; the stub derives a
-    * deterministic pseudo-embedding from the payload's md5 so everything
-    * around the model call is real and testable: the schema contract
-    * (`item_id`, `feature: array<float>` of static length), the
-    * partition-local init point, one output row per item, no driver
-    * round-trips. Component j is the first 32 md5 bits of
+  /** STUB feature: payload bytes → fixed-`dim` float vector, the
+    * [[extractImageFeatures]] fallback for payloads no JDK codec
+    * accepts. Component j is the first 32 md5 bits of
     * `hex(md5(payload)) + "-" + j` scaled to [-1, 1) — re-derivable in
-    * any engine from the payload alone, which is what lets the full
-    * payload→feature→ANN chain ([[multimodalAnn]]) run under the DuckDB
-    * oracle despite passing through a black-box-shaped mapPartitions.
-    */
-  def extractFeaturesStub(payloads: DataFrame, dim: Int = 64): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // (a real encoder loads here — once per partition, not per row)
-        it.map { case (id, bytes) => (id, MultimodalOps.stubFeature(bytes, dim)) }
-      }
-      .toDF("item_id", "feature")
-  }
-
-  /** The md5-derived pseudo-embedding formula (scaladoc above) — shared
-    * by [[extractFeaturesStub]] and [[extractImageFeatures]]' fallback
-    * path so the two can never drift.
+    * any engine from the payload alone.
     */
   private[graft] def stubFeature(bytes: Array[Byte], dim: Int): Array[Float] = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -809,11 +713,10 @@ object MultimodalOps {
     dh
   }
 
-  /** REAL multi-frame decode + frame sampling — the executed form of
-    * the [[sampleFrames]] plumbing (which until round 8 was the one
-    * remaining multimodal stub): ImageIO's GIF reader walks the
-    * sequence (`getNumImages(true)`), every `every`-th frame is pixel-
-    * decoded and hashed. Emits one row per SAMPLED frame
+  /** REAL multi-frame decode + frame sampling — the explode side of a
+    * video pipeline, with each sampled frame decoded: ImageIO's GIF
+    * reader walks the sequence (`getNumImages(true)`), every `every`-th
+    * frame is pixel-decoded and hashed. Emits one row per SAMPLED frame
     * (doc_id, nf, f, dh) where `nf` is the DECODER's frame count — the
     * oracle recomputes it from the closed form, so a reader that
     * miscounts or misdecodes any frame hash-mismatches. Undecodable

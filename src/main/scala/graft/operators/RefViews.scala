@@ -86,41 +86,13 @@ object RefViews {
         // NUMERIC fidelity: the reference's Postgres view returns numeric
         // (SUM over NUMERIC(10,2), main.py:202). The sum itself runs in
         // Spark's widened exact decimal — associative and partition-order
-        // independent — and `monthlyTransactionSummaryDecimal` exposes that
-        // decimal(20,2) contract for consumers who need NUMERIC output.
-        // The SparkEntry key emits the final column as DOUBLE on both the
-        // Spark and oracle sides: the round-trip comparison layer cannot
-        // canonicalize DECIMAL columns across engines, and a one-time
-        // terminal cast of an already-exact sum loses nothing measurable
-        // (the sf0.1 max |total_amount| ≈ 1e7 is exactly representable).
+        // independent. The SparkEntry key emits the final column as DOUBLE
+        // on both the Spark and oracle sides: the round-trip comparison
+        // layer cannot canonicalize DECIMAL columns across engines, and a
+        // one-time terminal cast of an already-exact sum loses nothing
+        // measurable (the sf0.1 max |total_amount| ≈ 1e7 is exactly
+        // representable).
         sum(col("amount")).cast("decimal(20,2)").cast("double").as("total_amount"))
-      .orderBy(col("month"), col("client_email"))
-  }
-
-  /** NUMERIC-contract variant of [[monthlyTransactionSummary]]: identical
-    * plan, but `total_amount` stays decimal(20,2) — the reference view's
-    * declared Postgres output type (SUM over NUMERIC(10,2), main.py:202).
-    * Library consumers who need exact NUMERIC (e.g. a JDBC load back into
-    * Postgres) use this; the SparkEntry key uses the DOUBLE-emitting form
-    * solely for cross-engine comparability. RefViewsSpec pins that the two
-    * agree to exact decimal equality after the terminal cast.
-    */
-  def monthlyTransactionSummaryDecimal(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_name"))
-    val o = Tables.orders(spark, sfDir).select(col("o_custkey"), col("o_orderkey"))
-    val l = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_shipdate"), col("l_extendedprice"))
-    c.join(o, c("c_custkey") === o("o_custkey"))
-      .join(l, o("o_orderkey") === l("l_orderkey"))
-      .select(
-        concat(date_format(date_trunc("month", col("l_shipdate")), "yyyy-MM"), lit("-01"))
-          .as("month"),
-        c("c_name").as("client_email"),
-        col("l_extendedprice").cast("decimal(18,2)").as("amount"))
-      .groupBy(col("month"), col("client_email"))
-      .agg(
-        count(lit(1)).as("transaction_count"),
-        sum(col("amount")).cast("decimal(20,2)").as("total_amount"))
       .orderBy(col("month"), col("client_email"))
   }
 

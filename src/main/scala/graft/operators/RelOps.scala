@@ -130,33 +130,19 @@ object RelOps {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  /** Sketch-based distinct counting: HLL `approx_count_distinct` per
-    * event_type — the at-scale replacement for [[distinctUsers]]' exact
-    * COUNT(DISTINCT). Exact distinct shuffles every distinct key; the
-    * HLL sketch is a fixed-size mergeable state, so the shuffle carries
-    * one sketch per group per mapper regardless of cardinality. No
-    * DuckDB oracle (HLL estimates are engine-specific by construction)
-    * — the driver records the rows-only check, and the spec bounds the
-    * estimate against the exact count within 3× the configured rsd.
-    */
-  def approxDistinctUsers(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-      .groupBy(col("event_type"))
-      .agg(
-        approx_count_distinct(col("user_id"), 0.02).as("n_users_approx"),
-        count(lit(1)).as("n_events"))
-      .orderBy(col("event_type"))
-
-  /** [[approxDistinctUsers]] under the ORACLE GATE (round-8 upgrade of
-    * the rows-only check): the HLL estimate itself is engine-specific
-    * and can never hash-match DuckDB, so the hashed output carries the
-    * EXACT distinct count (value-verified by the oracle) plus `est_ok`
-    * — the sketch's 3×rsd error bound EVALUATED IN SPARK. The oracle
-    * asserts `TRUE`: an estimate drifting out of bounds flips the
-    * boolean and turns the row red in the driver compare, instead of
-    * only in a spec. (The exact distinct here exists to judge the
-    * sketch — production runs the sketch alone, which is the point of
-    * [[approxDistinctUsers]].)
+  /** Sketch-based distinct counting under the ORACLE GATE: HLL
+    * `approx_count_distinct` per event_type — the at-scale replacement
+    * for [[distinctUsers]]' exact COUNT(DISTINCT). Exact distinct
+    * shuffles every distinct key; the HLL sketch is a fixed-size
+    * mergeable state, so the shuffle carries one sketch per group per
+    * mapper regardless of cardinality. The HLL estimate itself is
+    * engine-specific and can never hash-match DuckDB, so the hashed
+    * output carries the EXACT distinct count (value-verified by the
+    * oracle) plus `est_ok` — the sketch's 3×rsd error bound EVALUATED
+    * IN SPARK. The oracle asserts `TRUE`: an estimate drifting out of
+    * bounds flips the boolean and turns the row red in the driver
+    * compare. (The exact distinct here exists to judge the sketch —
+    * production runs the sketch alone.)
     */
   def approxDistinctUsersGated(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)

@@ -148,7 +148,7 @@ object TextOps {
     * is a sequential fold over the token array — exact long
     * arithmetic, no join, no aggregation, so the SAME keep decision
     * can run stateless inside a streaming micro-batch
-    * ([[graft.streaming.DocStream.curateDocStreamQuality]]) where the
+    * ([[graft.streaming.DocStream.curateDocStreamContent]]) where the
     * broadcast-join form's groupBy would demand watermarked
     * aggregation state. Spec-asserted to reproduce
     * [[qualityClassifier]]'s score and keep on every corpus doc.
@@ -663,12 +663,6 @@ object TextOps {
       |FROM documents
       |ORDER BY doc_id""".stripMargin
 
-  /** Character n-grams WITH multiplicity (frequency matters for profile
-    * scoring, unlike the dedup shingle sets). Caller guards length ≥ n.
-    */
-  def charNgrams(c: Column, n: Int): Column =
-    transform(sequence(lit(1), length(c) - (n - 1)), i => c.substr(i, lit(n)))
-
   /** Per-language trigram profiles, alphabetical language order. Every
     * trigram here is non-self-overlapping (first char ≠ last char), a
     * property [[langNgram]]'s replace-based counting depends on.
@@ -686,7 +680,7 @@ object TextOps {
     // 1 or 2), so non-overlapping replace count = overlapping count.
     // Per-language hits are sums of 4 such counts; argmax via greatest
     // over struct(hits, -langRank) preserves the hits-desc/lang-asc
-    // tie-break. Replaces the explode(charNgrams) → broadcast join →
+    // tie-break. Replaces the explode(character n-grams) → broadcast join →
     // groupBy → window → corpus-sized join-back plan: no arrays, no
     // HOFs, no exchanges but the pinned output sort — and unlike the
     // rejected tfidf HOF experiment, replace/length are whole-stage-
@@ -2553,41 +2547,19 @@ object TextOps {
       |GROUP BY 1
       |ORDER BY doc_id""".stripMargin
 
-  /** The 100 TB path [[docQuantiles]]'s scaladoc points at, EXECUTED:
-    * the same profiling shape with `percentile_approx` — a mergeable
-    * bounded-size quantile sketch per (group, column) instead of exact
-    * per-group value counts, so aggregation state no longer grows with
-    * distinct values. `accuracy` 10000 bounds rank error to ~N/10000
-    * per group. Rows-only by declared design (a sketch estimate is
-    * engine-specific and cannot hash-match a DuckDB oracle);
-    * TextOpsSpec bounds it against the exact result instead: monotone
-    * p25 ≤ p50 ≤ p75, every estimate inside [min, max], and the approx
-    * median inside the exact [p25, p75] hull.
-    */
-  def docQuantilesApprox(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("lang"), length(col("text")).as("len"),
-        size(tokens(col("text"))).as("n_tok"))
-      .groupBy(col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        min(col("len")).cast("long").as("len_min"),
-        expr("percentile_approx(len, 0.25, 10000)").cast("long").as("len_p25"),
-        expr("percentile_approx(len, 0.5, 10000)").cast("long").as("len_p50"),
-        expr("percentile_approx(len, 0.75, 10000)").cast("long").as("len_p75"),
-        max(col("len")).cast("long").as("len_max"),
-        expr("percentile_approx(n_tok, 0.5, 10000)").cast("long").as("tok_p50"))
-      .orderBy(col("lang"))
-
-  /** [[docQuantilesApprox]] under the ORACLE GATE (round-8 upgrade of
-    * the rows-only check): sketch estimates can't hash-match another
-    * engine, so the hashed row carries exact per-group stats plus four
-    * `*_ok` booleans — each asserts the estimate's RANK interval in the
-    * actual data (`[#strictly-below + 1, #at-or-below]`) intersects the
-    * target rank window `p·N ± max(2, 2·N/accuracy)`, the sketch's own
-    * guarantee stated convention-independently. The oracle asserts all
-    * four TRUE over the same exact stats: a drifting sketch flips a
-    * boolean and the driver compare goes red.
+  /** The 100 TB path [[docQuantiles]]'s scaladoc points at, EXECUTED
+    * under the ORACLE GATE: the same profiling shape with
+    * `percentile_approx` — a mergeable bounded-size quantile sketch per
+    * (group, column) instead of exact per-group value counts, so
+    * aggregation state no longer grows with distinct values. Sketch
+    * estimates can't hash-match another engine, so the hashed row
+    * carries exact per-group stats plus four `*_ok` booleans — each
+    * asserts the estimate's RANK interval in the actual data
+    * (`[#strictly-below + 1, #at-or-below]`) intersects the target rank
+    * window `p·N ± max(2, 2·N/accuracy)`, the sketch's own guarantee
+    * stated convention-independently. The oracle asserts all four TRUE
+    * over the same exact stats: a drifting sketch flips a boolean and
+    * the driver compare goes red.
     */
   def docQuantilesApproxGated(spark: SparkSession, sfDir: String): DataFrame = {
     // The estimate join keys on a NULL-safe surrogate (coalesce to a

@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** HTTP CSV ingestion (SURVEY.md S1/S2, main.py:62-87): one driver-side
@@ -31,13 +31,18 @@ object CsvHttpSource {
   def read(spark: SparkSession, url: String, schema: StructType,
            fetch: HttpFetch): DataFrame = {
     import spark.implicits._
-    val text = fetch.getString(url)
-    val lines = splitRecords(text).filter(_.nonEmpty).toDS()
+    val records = splitRecords(fetch.getString(url)).filter(_.nonEmpty)
     // escape = quote: RFC 4180 / pandas double a quote to escape it
     // inside a quoted field ("y ""q""" → y "q"). Spark's univocity
     // parser defaults to backslash-escape, which would leave the
     // doubled quotes in the parsed value.
-    spark.read.option("header", "true").option("escape", "\"").schema(schema).csv(lines)
+    val parsed = spark.read.option("header", "true").option("escape", "\"")
+      .schema(schema).csv(records.toDS())
+    // the parsed frame's plan has no statistics, so it would estimate as
+    // larger than any broadcast threshold; the rows are the records
+    // after the header
+    GraftColumnBridge.ofRdd(spark, parsed.queryExecution.toRdd, parsed.schema,
+      math.max(records.size - 1, 0))
   }
 
   /** RFC 4180 record split: a newline terminates a record only OUTSIDE

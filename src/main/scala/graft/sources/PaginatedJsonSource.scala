@@ -4,8 +4,6 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -120,8 +118,7 @@ object PaginatedJsonSource {
       StructField("arrival_idx", LongType), StructField("raw", StringType)))
     val rdd = spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism)
       .map { case (i, s) => InternalRow(i, UTF8String.fromString(s)) }
-    Some(GraftColumnBridge.ofRdd(spark, rdd, schema,
-      EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema)) * rows.size))
+    Some(GraftColumnBridge.ofRdd(spark, rdd, schema, rows.size))
   }
 
   /** [[readRaw]] parsed under a schema inferred from the data itself (the

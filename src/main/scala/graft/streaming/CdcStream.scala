@@ -56,7 +56,8 @@ object CdcStream {
     * space is the entity population (customers), not the event stream
     * — bounded state by the domain, the same argument as the batch
     * upsert's groupBy key grain. An unbounded-key deployment would add
-    * the [[EventStream.dedupFirstStream]] TTL discipline.
+    * an event-time timeout per key (`GroupStateTimeout.EventTimeTimeout`)
+    * so the watermark evicts idle keys.
     */
   def upsertStateStream(changes: Dataset[ChangeRec], base: String): StreamingQuery = {
     import changes.sparkSession.implicits._

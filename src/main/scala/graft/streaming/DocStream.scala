@@ -5,53 +5,30 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{CurationOps, DedupOps}
 
-/** Streaming curation: the batch pipeline's exact-dedup and PII-scrub
-  * stages (CurationPipeline steps 1 and 4) as ONE incremental flow over
-  * an unbounded document source — `readStream` → dedup → scrub →
-  * `writeStream`. Nothing is reimplemented: the content key is the
-  * SAME `DedupOps.exactKey` expression and the scrub the SAME
-  * `CurationOps.scrubbedText` expression the batch stages use, applied
-  * over a streaming frame; only the dedup mechanism changes, from a
-  * groupBy(min) to engine-managed `dropDuplicatesWithinWatermark`
-  * state. DocStreamSpec proves batch/stream equivalence on the
-  * documents table itself.
+/** Streaming curation and index maintenance: each lifecycle key's
+  * stream re-runs the batch operators' expressions over an unbounded
+  * document source — `readStream` → transform → `writeStream` — and
+  * appends to the CURRENT epoch of its table family. Nothing is
+  * reimplemented: the curated stream scrubs with the SAME
+  * `CurationOps.scrubbedText` expression and scores with the SAME
+  * `TextOps.classifierMarginCents` the batch stages use, and the index
+  * maintainers append through the bulk builds' own encode expressions.
   *
-  * Scale notes: dedup state is one entry per distinct content key
-  * WITHIN the watermark horizon — eviction keeps state proportional to
-  * the out-of-orderness budget, not stream length (the only dedup an
-  * unbounded stream can promise with finite state; the batch
-  * incremental form for unbounded lookback is the persisted survivor
-  * index, DedupOps.incrementalDedup). The scrub is stateless row-local
-  * regexp work that pipelines in each micro-batch.
+  * Scale notes: the curated stream's dedup state is one entry per
+  * distinct content key WITHIN the watermark horizon — eviction keeps
+  * state proportional to the out-of-orderness budget, not stream length
+  * (the only dedup an unbounded stream can promise with finite state;
+  * the batch incremental form for unbounded lookback is the persisted
+  * survivor index, DedupOps.incrementalDedup). The scrub and the
+  * quality margin are stateless row-local work that pipelines in each
+  * micro-batch.
   */
 object DocStream {
 
-  /** `docs` must carry (doc_id, text, ts) where `ts` is the arrival
-    * event time the watermark advances on.
-    */
-  def curateDocStream(docs: DataFrame, watermark: String = "1 hour"): DataFrame =
-    docs
-      .withWatermark("ts", watermark)
-      .withColumn("key_hash", DedupOps.exactKey(col("text")))
-      .dropDuplicatesWithinWatermark("key_hash")
-      .withColumn("text", CurationOps.scrubbedText(col("text")))
-
-  /** [[curateDocStream]] plus the model-based quality gate — the
-    * third batch curation stage joins the streaming flow. The margin
-    * ([[graft.operators.TextOps.classifierMarginCents]]) is row-local
-    * long arithmetic over the scrubbed text, so the filter is
-    * STATELESS: it adds nothing to the streaming state store and
-    * pipelines inside each micro-batch like the scrub. DocStreamSpec
-    * proves the three-stage stream row-identical to the batch stages.
-    */
-  def curateDocStreamQuality(docs: DataFrame, watermark: String = "1 hour"): DataFrame =
-    curateDocStream(docs, watermark)
-      .withColumn("quality_cents",
-        graft.operators.TextOps.classifierMarginCents(col("text")))
-      .filter(col("quality_cents") >= 0L)
-
-  /** [[curateDocStreamQuality]] keyed on the FULL content hash — the
-    * survivor-invariant form the driver-gated lifecycle key needs.
+  /** Streaming exact dedup, scrub and quality gate, keyed on the FULL
+    * content hash — the survivor-invariant form the driver-gated
+    * lifecycle key needs. `docs` must carry (doc_id, text, ts) where
+    * `ts` is the arrival event time the watermark advances on.
     * Under arbitrary replay disorder, dropDuplicatesWithinWatermark
     * keeps an arbitrary first-seen row per key, so a deterministic
     * oracle hash requires every same-key row to be downstream-
@@ -60,9 +37,10 @@ object DocStream {
     * differing later (232 such collisions at sf0.1) would leave
     * replay-order-dependent scrubbed/quality values behind; keying on
     * md5 of the whole text makes all survivor choices equivalent. The
-    * scrub and quality stages are the SAME expressions as
-    * [[curateDocStreamQuality]], applied in the same order (quality is
-    * scored on the SCRUBBED text).
+    * scrub and quality stages are the SAME expressions as the batch
+    * curation stages, applied in the same order (quality is scored on
+    * the SCRUBBED text). The margin is row-local long arithmetic, so
+    * the quality filter adds nothing to the streaming state store.
     */
   def curateDocStreamContent(docs: DataFrame, watermark: String = "1 hour"): DataFrame =
     docs
@@ -95,61 +73,15 @@ object DocStream {
       }
       .start()
 
-  /** Streaming incremental dedup with UNBOUNDED lookback: each
-    * micro-batch dedups against the PERSISTED survivor index and
-    * appends its own survivors — the streaming form of the daily batch
-    * loop (DedupOps.dedupBatchAgainstIndex / appendToDedupIndex),
-    * via `foreachBatch`, the escape hatch for sink logic the
-    * declarative sinks can't express (a read-then-append against a
-    * bucketed table). Contrast with [[curateDocStream]]'s
-    * dropDuplicatesWithinWatermark: that one's state is bounded by the
-    * watermark horizon and lives in the state store; this one's state
-    * is the index TABLE — durable across restarts, shared with batch
-    * jobs, growing one narrow row per new distinct document.
-    *
-    * The survivors frame materializes (localCheckpoint) BEFORE the
-    * append so the read plan never lists files the write is adding.
-    */
-  def incrementalDedupStream(docs: DataFrame, indexName: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        dedupBatchIntoIndex(batch, indexName)
-      }
-      .start()
-
-  /** Epoch-aware form of [[incrementalDedupStream]]: each micro-batch
-    * resolves the index family's CURRENT epoch
-    * ([[graft.operators.Layout.currentEpochTable]]) before probing and
-    * appending — so a nightly rebuild/rotation (or a rollback) redirects
-    * a long-running stream to the new snapshot at the next batch
-    * boundary, no restart. A batch in flight keeps the table it
-    * resolved: published epoch tables only ever mutate by THIS stream's
-    * own appends, so the resolve-probe-append triple stays consistent
-    * within a batch (single-writer, like the batch loop).
-    */
-  def incrementalDedupStreamEpochs(docs: DataFrame, base: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val name = graft.operators.Layout
-          .currentEpochTable(batch.sparkSession, base)
-          .getOrElse(sys.error(s"no published epoch for index family $base"))
-        dedupBatchIntoIndex(batch, name)
-      }
-      .start()
-
   /** Search-index ingest: each micro-batch of (doc_id, text) appends
     * its postings to the CURRENT epoch of the positional inverted
     * index and advances the exact (n_docs, sum_dl) stats sidecar by
     * integer addition ([[graft.operators.TextOps.appendToInvertedIndex]]
     * — same encode expressions as the bulk build, so stream-built and
     * batch-built indexes cannot diverge; DocStreamSpec asserts probe
-    * equality). Epoch resolution per batch, like
-    * [[incrementalDedupStreamEpochs]]: a nightly rotation redirects the
-    * stream at the next batch boundary.
+    * equality). Epoch resolution per batch, like every index
+    * maintainer: a nightly rotation redirects the stream at the next
+    * batch boundary, and a batch in flight keeps the table it resolved.
     */
   def appendPostingsStream(docs: DataFrame, base: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -186,22 +118,6 @@ object DocStream {
       }
       .start()
 
-  /** One micro-batch of the incremental-dedup loop: probe, then append
-    * survivors. The survivors frame materializes (localCheckpoint)
-    * BEFORE the append so the read plan never lists files the write is
-    * adding.
-    */
-  private def dedupBatchIntoIndex(batch: DataFrame, name: String): Unit = {
-    // micro-batch-sized, inside foreachBatch: a failed batch re-runs
-    // from the STREAM's checkpoint, which is the recovery path here
-    val survivors = DedupOps
-      .dedupBatchAgainstIndex(batch.sparkSession, name, batch)
-      .localCheckpoint()
-    if (!survivors.isEmpty) DedupOps.appendToDedupIndex(name, survivors)
-    survivors.unpersist()
-    ()
-  }
-
   /** Streaming substring-dedup INDEX MAINTENANCE: each micro-batch's
     * O(n) rolling window-hash rows ([[DedupOps.windowRows]] — the
     * row-local, shuffle-free stage) append to a durable (doc_id,
@@ -231,29 +147,6 @@ object DocStream {
   def substringDedupFromWindows(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame =
     DedupOps.metricsFromWindowRows(spark.table(table))
-
-  /** Streaming fuzzy decontamination: the benchmark side is STATIC and
-    * triage is per-document independent (each doc's bands and verified
-    * Jaccard scores involve only that doc and the benchmark), so each
-    * micro-batch runs the exact batch operator
-    * ([[CurationOps.decontaminateFuzzyMetrics]]) against the fixed
-    * benchmark and appends its flagged docs — the union over batches is
-    * row-identical to one batch run, spec-proven. The stateless-
-    * per-batch shape means no streaming state store at all; at 100 TB
-    * the benchmark bands would be precomputed once and broadcast-reused
-    * per batch.
-    */
-  def decontaminateFuzzyStream(docs: DataFrame, bench: DataFrame,
-      outTable: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        CurationOps.decontaminateFuzzyMetrics(
-            batch.select(col("doc_id"), col("text")), bench)
-          .write.format("parquet").mode("append").saveAsTable(outTable)
-        ()
-      }
-      .start()
 
   /** Candidate-only decontamination ingest — the 100 TB streaming
     * shape the lifecycle key gates: each micro-batch shingles and

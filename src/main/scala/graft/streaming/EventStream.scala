@@ -1,53 +1,28 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.EventOps
 
 /** Structured Streaming forms of the event analytics (SURVEY.md §7 step
   * 6): the batch operators' transforms re-run incrementally over an
-  * unbounded source — `readStream` → transform → `writeStream`.
+  * unbounded source — `readStream` → transform → `writeStream` — with
+  * each micro-batch appended to the CURRENT epoch of a lifecycle key's
+  * table family.
   *
   * Scale notes:
   *  - Watermarks bound state: a window/session older than the watermark
   *    is finalized and evicted, so state size tracks the out-of-orderness
   *    budget, not stream length.
-  *  - The windowed agg IS the batch transform (EventOps.windowedAgg) —
-  *    Catalyst plans it as StateStoreSave/Restore around the same hash
-  *    aggregate; nothing is reimplemented.
+  *  - The window partials ARE the batch transform
+  *    (EventOps.windowedAggPartial) — Catalyst plans it as
+  *    StateStoreSave/Restore around the same hash aggregate; nothing is
+  *    reimplemented.
   *  - Sessionization uses the native `session_window` (gap-merging is
-  *    in the state store, not user code); the custom-state variant
-  *    below shows the `flatMapGroupsWithState` escape hatch for logic
-  *    the built-ins can't express.
+  *    in the state store, not user code).
   */
 object EventStream {
-
-  /** Event row for the typed custom-state operator. */
-  case class StreamEvent(event_id: Long, user_id: String,
-                         ts: Timestamp, value: Double)
-
-  /** Streaming tumbling 1-hour windows with a watermark; same transform
-    * as the batch q_event_windows.
-    */
-  def windowedCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    EventOps.windowedAgg(events.withWatermark("ts", watermark))
-
-  /** Gap-based session aggregation on the native session_window. */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-                    watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("value_sum"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("value_sum"))
 
   /** Stream-stream inner join: match each user's click to their
     * purchases within the next `joinWindow` (event time). Both sides
@@ -157,54 +132,4 @@ object EventStream {
         ()
       }
       .start()
-
-  /** Engine-managed streaming exact dedup: `dropDuplicatesWithinWatermark`
-    * keeps one row per `event_id` and lets the state store evict a key
-    * once the watermark passes its event time plus the delay — the
-    * built-in analog of [[dedupFirstStream]]'s custom TTL state. Prefer
-    * this form when the semantics are exactly keep-one-per-key-set;
-    * the flatMapGroupsWithState form below exists for richer emission
-    * logic (min-by ordering, custom payloads).
-    */
-  def dedupExactStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")
-
-  /** Custom-state streaming first-wins dedup (the streaming analog of
-    * Cleaning.dedupFirstKeepFirst): per key, emit only the first event
-    * seen; state is one boolean per key, and — crucially for an
-    * unbounded key space — state is BOUNDED: each key's flag carries an
-    * event-time timeout of `stateTtl` past the first event, so once the
-    * watermark passes that horizon the flag evicts. A duplicate arriving
-    * later than that would be older than the watermark and is dropped
-    * upstream, so eviction never re-admits a dup it could have caught —
-    * the semantics are "first event per key within the event-time
-    * horizon", which is the only dedup an unbounded stream can promise
-    * with finite state.
-    */
-  def dedupFirstStream(events: Dataset[StreamEvent],
-                       watermark: String = "10 minutes",
-                       stateTtl: String = "30 minutes"): Dataset[StreamEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Boolean, StreamEvent](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, it: Iterator[StreamEvent], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // watermark passed the horizon: evict the flag
-            Iterator.empty
-          } else if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            // within a micro-batch, "first" = smallest (ts, event_id)
-            val first = it.minBy(e => (e.ts.getTime, e.event_id))
-            // timeout base must sit above the current watermark or Spark
-            // rejects it; the +1 ms covers an event exactly at the mark
-            val base = math.max(first.ts.getTime, state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(base, stateTtl)
-            Iterator(first)
-          }
-      }
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Layout, SimilarityOps}
 
 /** Streaming ANN index maintenance — the vector-side twin of
-  * [[DocStream.incrementalDedupStreamEpochs]]: newly arriving
+  * [[DocStream.appendBandsStream]]: newly arriving
   * embeddings are routed to their IVF cells and appended into the
   * PERSISTED epoch-versioned index, via `foreachBatch` (the escape
   * hatch for read-then-append sink logic the declarative sinks can't

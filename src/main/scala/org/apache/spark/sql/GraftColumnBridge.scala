@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
@@ -22,11 +23,15 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-  /** A frame over `rdd` whose plan estimates its size as `sizeInBytes`:
-    * a plain RDD frame estimates every RDD as larger than any broadcast
-    * threshold, so joins over it never broadcast it. */
+  /** A frame over the `rows` rows of `rdd` whose plan estimates its size
+    * as `rows` × the schema's estimated row width — the estimate a
+    * LocalRelation of the same rows gets. A plain RDD frame estimates
+    * every RDD as larger than any broadcast threshold, so joins over it
+    * never broadcast it. */
   def ofRdd(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType,
-            sizeInBytes: BigInt): DataFrame =
-    ofRows(spark, LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(
-      spark.asInstanceOf[classic.SparkSession], Some(Statistics(sizeInBytes)), None))
+            rows: Long): DataFrame = {
+    val attrs = DataTypeUtils.toAttributes(schema)
+    ofRows(spark, LogicalRDD(attrs, rdd)(spark.asInstanceOf[classic.SparkSession],
+      Some(Statistics(EstimationUtils.getSizePerRow(attrs) * rows)), None))
+  }
 }

@@ -252,50 +252,6 @@ class DedupOpsSpec extends SparkSpec {
     }
   }
 
-  test("dedup index append: three-batch daily loop equals full-corpus dedup") {
-    import graft.operators.{DedupOps, Layout}
-    val name = "graft_dedup_idx_spec_loop"
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      Layout.clearStaleTableLocation(spark, name)
-      Layout.pinBucketedReads(spark)
-      val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-      val n = docs.agg(max("doc_id")).head().getLong(0) + 1
-      val b1 = docs.filter(col("doc_id") < n / 3)
-      val b2 = docs.filter(col("doc_id") >= n / 3 && col("doc_id") < 2 * n / 3)
-      val b3 = docs.filter(col("doc_id") >= 2 * n / 3)
-      // day 1: bootstrap the index from batch 1's survivors
-      val idx1 = b1.groupBy(DedupOps.exactKey(col("text")).as("key_hash"))
-        .agg(min(col("doc_id")).as("doc_id"))
-      Layout.writeBucketed(idx1, name, "key_hash", 32)
-      // days 2 and 3: dedup the day's batch against the index, append
-      // its survivors — the corpus is never re-scanned
-      val s2 = DedupOps.dedupBatchAgainstIndex(spark, name, b2)
-      DedupOps.appendToDedupIndex(name, s2)
-      val s3 = DedupOps.dedupBatchAgainstIndex(spark, name, b3)
-      DedupOps.appendToDedupIndex(name, s3)
-      val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getString(1))
-      val got = spark.table(name).select("doc_id", "key_hash")
-        .collect().map(key).toSet
-      val full = DedupOps.docDedup(spark, sf).select("doc_id", "key_hash")
-        .collect().map(key).toSet
-      assert(got === full)
-      // the appends left one file per non-empty bucket per batch —
-      // compaction rewrites to one file per bucket, content unchanged
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      def dataFiles: Int = new java.io.File(warehouse, name)
-        .listFiles().count(_.getName.startsWith("part-"))
-      val before = dataFiles
-      Layout.compactBucketed(spark, name, "key_hash", 32)
-      assert(dataFiles < before, s"compaction must reduce files ($before before)")
-      val gotAfter = spark.table(name).select("doc_id", "key_hash")
-        .collect().map(key).toSet
-      assert(gotAfter === full)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-  }
-
   test("minhashPersisted: equals minhashLsh; band self-join is exchange-free") {
     import graft.operators.DedupOps
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

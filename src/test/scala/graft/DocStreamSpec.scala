@@ -7,120 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.{CurationOps, DedupOps}
 import graft.streaming.DocStream
 
-/** Batch/stream equivalence of the curation stages on the documents
-  * table itself (not a synthetic toy): the streamed dedup+scrub output
-  * must equal the batch keep-first dedup + scrub row set.
+/** Batch/stream equivalence of the streaming maintainers on the
+  * documents table itself (not a synthetic toy): each stream-built
+  * table must answer exactly as the one-pass batch operator.
   */
 class DocStreamSpec extends SparkSpec {
-
-  test("streaming dedup+scrub over documents equals the batch curation stages") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // feed in doc_id order, one partition per micro-batch, so the
-    // stream's first-arrival survivor IS the batch min-doc_id survivor
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (b1, b2) = docs.splitAt(docs.length / 2)
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    val out = DocStream.curateDocStream(stream, watermark = "1 hour")
-    val q = out.writeStream.format("memory").queryName("cur_stream")
-      .outputMode("append").start()
-    mem.addData(b1: _*)
-    q.processAllAvailable() // batch boundary: cross-batch dups hit state
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("cur_stream")
-      .select("doc_id", "key_hash", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-
-    // the batch stages, composed exactly as CurationPipeline.run does
-    val raw = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val batch = raw
-      .join(DedupOps.exactDedupSurvivorIds(raw), Seq("doc_id"), "left_semi")
-      .withColumn("key_hash", DedupOps.exactKey(col("text")))
-      .withColumn("text", CurationOps.scrubbedText(col("text")))
-      .select("doc_id", "key_hash", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-
-    assert(streamed === batch)
-    assert(streamed.nonEmpty && streamed.size < docs.size) // dups actually removed
-  }
-
-  test("streaming dedup+scrub+quality-filter equals the three batch stages") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.TextOps
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (b1, b2) = docs.splitAt(docs.length / 2)
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    val out = DocStream.curateDocStreamQuality(stream, watermark = "1 hour")
-    val q = out.writeStream.format("memory").queryName("cur_q_stream")
-      .outputMode("append").start()
-    mem.addData(b1: _*)
-    q.processAllAvailable()
-    mem.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("cur_q_stream")
-      .select("doc_id", "key_hash", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-
-    val raw = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val deduped = raw
-      .join(DedupOps.exactDedupSurvivorIds(raw), Seq("doc_id"), "left_semi")
-      .withColumn("key_hash", DedupOps.exactKey(col("text")))
-      .withColumn("text", CurationOps.scrubbedText(col("text")))
-    val batch = deduped
-      .filter(TextOps.classifierMarginCents(col("text")) >= 0L)
-      .select("doc_id", "key_hash", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-
-    assert(streamed === batch)
-    // the gate actually rejects something relative to dedup+scrub alone
-    assert(streamed.size < deduped.count())
-    assert(streamed.nonEmpty)
-  }
-
-  test("incrementalDedupStream: micro-batches maintain the persisted index ≡ full-corpus dedup") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.DedupOps
-    val name = "graft_dedup_idx_stream_spec"
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      DedupOps.initDedupIndex(spark, name)
-      // doc_id-ordered single-partition micro-batches → the stream's
-      // first-arrival survivor is the batch min-doc_id survivor
-      val docs = Tables.documents(spark, sf).select("doc_id", "text")
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      val mem = MemoryStream[(Long, String)]
-      val q = DocStream.incrementalDedupStream(
-        mem.toDF().toDF("doc_id", "text"), name)
-      mem.addData(b1: _*)
-      q.processAllAvailable() // index now holds batch-1 survivors
-      mem.addData(b2: _*)
-      q.processAllAvailable() // batch-2 dups against batch 1 are dropped
-      q.stop()
-      val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getString(1))
-      val got = spark.table(name).select("doc_id", "key_hash")
-        .collect().map(key).toSet
-      val full = DedupOps.docDedup(spark, sf).select("doc_id", "key_hash")
-        .collect().map(key).toSet
-      assert(got === full)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-  }
 
   test("substringWindowStream: stream-built window index ≡ batch substring dedup") {
     val s = spark; import s.implicits._
@@ -203,74 +94,6 @@ class DocStreamSpec extends SparkSpec {
     } finally {
       graft.operators.Layout.dropEpochFamily(spark, base, sidecars = Seq("_stats"))
       graft.operators.Layout.dropEpochFamily(spark, ref, sidecars = Seq("_stats"))
-    }
-  }
-
-  test("decontaminateFuzzyStream: per-batch triage vs static benchmark ≡ one batch run") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val table = "graft_fuzzy_stream_spec"
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val all = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-      val bench = all.filter(col("doc_id") % 50 === 0).localCheckpoint()
-      val corpus = all.filter(col("doc_id") % 50 =!= 0)
-      val docs = corpus.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      val mem = MemoryStream[(Long, String)]
-      val q = DocStream.decontaminateFuzzyStream(
-        mem.toDF().toDF("doc_id", "text"), bench, table)
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      q.stop()
-      spark.catalog.refreshTable(table)
-      val key = (r: org.apache.spark.sql.Row) =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      val streamed = spark.table(table).collect().map(key).toSet
-      val batch = CurationOps.decontaminateFuzzyMetrics(corpus, bench)
-        .collect().map(key).toSet
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-  }
-
-  test("curateDocStream over a real file source: one survivor per key, scrub applied") {
-    val inDir = java.nio.file.Files.createTempDirectory("graft_docs_in").toString
-    try {
-      val docs = Tables.documents(spark, sf)
-        .select(col("doc_id"), col("text"))
-        .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-      docs.write.mode("overwrite").parquet(inDir)
-      // file-at-a-time micro-batches: survivor per key is whichever file
-      // arrives first (arrival-order semantics — the MemoryStream test
-      // above pins the deterministic-order case)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val out = DocStream.curateDocStream(stream)
-      val q = out.writeStream.format("memory").queryName("cur_file")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("cur_file").select("doc_id", "key_hash", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      // exactly one survivor per content key, covering every key
-      assert(got.map(_._2).distinct.length === got.length)
-      val expectKeys = docs.select(DedupOps.exactKey(col("text")).as("k"))
-        .distinct().collect().map(_.getString(0)).toSet
-      assert(got.map(_._2).toSet === expectKeys)
-      // each survivor's emitted text is the scrub of ITS OWN input text
-      val scrubbed = docs
-        .withColumn("scr", CurationOps.scrubbedText(col("text")))
-        .select("doc_id", "scr").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got.forall { case (id, _, text) => text == scrubbed(id) })
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(inDir))
     }
   }
 

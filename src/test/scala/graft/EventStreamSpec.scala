@@ -4,10 +4,11 @@ import java.sql.Timestamp
 
 // Spark 4.1 moved MemoryStream under execution.streaming.runtime
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.EventStream
-import graft.streaming.EventStream.StreamEvent
+
+/** Event row the MemoryStream sources below carry. */
+case class EventRow(event_id: Long, user_id: String, ts: Timestamp, value: Double)
 
 /** Structured Streaming specs via MemoryStream → memory sink: the same
   * transforms as batch, executed incrementally over micro-batches.
@@ -15,55 +16,13 @@ import graft.streaming.EventStream.StreamEvent
 class EventStreamSpec extends SparkSpec {
 
   private def ev(id: Long, user: String, minute: Long, value: Double) =
-    StreamEvent(id, user, new Timestamp(minute * 60000L), value)
-
-  private def runToCompletion(name: String)(start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val q = start
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  test("windowedCounts aggregates incrementally across micro-batches") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamEvent]
-    val out = EventStream.windowedCounts(mem.toDF(), watermark = "0 seconds")
-    runToCompletion("win") {
-      mem.addData(ev(1, "u1", 10, 1.0), ev(2, "u1", 20, 2.0)) // hour 0
-      mem.addData(ev(3, "u2", 70, 3.0))                       // hour 1
-      out.writeStream.format("memory").queryName("win_out")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    }
-    val rows = spark.table("win_out").orderBy("window_start")
-      .collect().map(r => (r.getTimestamp(0).getTime / 60000, r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows === Seq((0L, 2L, 3.0), (60L, 1L, 3.0)))
-  }
-
-  test("sessionCounts merges events within gap, splits across it") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamEvent]
-    val out = EventStream.sessionCounts(mem.toDF(), gap = "30 minutes",
-      watermark = "0 seconds")
-    runToCompletion("sess") {
-      mem.addData(
-        ev(1, "u1", 0, 1.0), ev(2, "u1", 10, 1.0),  // one session
-        ev(3, "u1", 120, 1.0),                      // gap 110min → new session
-        ev(4, "u2", 0, 1.0))
-      out.writeStream.format("memory").queryName("sess_out")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    }
-    val rows = spark.table("sess_out")
-      .orderBy("user_id", "session_start")
-      .collect().map(r => (r.getString(0), r.getLong(3))).toSeq
-    assert(rows === Seq(("u1", 2L), ("u1", 1L), ("u2", 1L)))
-  }
+    EventRow(id, user, new Timestamp(minute * 60000L), value)
 
   test("stream-stream join matches purchases within the click window") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[StreamEvent]
-    val purchases = MemoryStream[StreamEvent]
+    val clicks = MemoryStream[EventRow]
+    val purchases = MemoryStream[EventRow]
     val out = EventStream.clickToPurchase(clicks.toDF(), purchases.toDF(),
       joinWindow = "30 minutes", watermark = "0 seconds")
     val q = out.writeStream.format("memory").queryName("ss_join")
@@ -79,64 +38,6 @@ class EventStreamSpec extends SparkSpec {
       .select("user_id", "click_id", "purchase_value")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(rows === Seq(("u1", 1L, 9.99)))
-  }
-
-  test("dedupFirstStream emits only the first event per key across batches") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamEvent]
-    val out = EventStream.dedupFirstStream(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    mem.addData(ev(5, "u1", 10, 1.0), ev(2, "u1", 5, 1.0)) // first = id 2 (min ts)
-    q.processAllAvailable()
-    mem.addData(ev(9, "u1", 1, 1.0), ev(7, "u2", 3, 1.0))  // u1 already seen
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("dedup_out").orderBy("user_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(rows === Seq((2L, "u1"), (7L, "u2")))
-  }
-
-  test("dedupExactStream keeps one row per event_id across batches") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamEvent]
-    val out = EventStream.dedupExactStream(mem.toDF(), watermark = "10 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_exact")
-      .outputMode("append").start()
-    mem.addData(ev(1, "u1", 50, 1.0), ev(1, "u1", 50, 1.0)) // in-batch dup
-    q.processAllAvailable()
-    mem.addData(ev(1, "u1", 51, 1.0), ev(2, "u2", 52, 1.0)) // cross-batch dup
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_exact")
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(ids === Seq(1L, 2L))
-  }
-
-  test("dedupFirstStream evicts state once the watermark passes the TTL") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamEvent]
-    val out = EventStream.dedupFirstStream(mem.toDS(),
-      watermark = "10 minutes", stateTtl = "30 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_ttl")
-      .outputMode("append").start()
-    mem.addData(ev(1, "u1", 50, 1.0))     // u1 first seen; horizon = min 80
-    q.processAllAvailable()
-    mem.addData(ev(2, "u3", 200, 1.0))    // advances watermark to min 190
-    q.processAllAvailable()
-    mem.addData(ev(3, "u2", 195, 1.0))    // batch where u1's timeout fires
-    q.processAllAvailable()
-    mem.addData(ev(4, "u1", 220, 1.0))    // u1 state evicted → re-emitted
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("dedup_ttl").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    // id 4 proves eviction: with NoTimeout semantics u1 would stay
-    // suppressed forever
-    assert(rows === Seq((1L, "u1"), (2L, "u3"), (3L, "u2"), (4L, "u1")))
   }
 
   test("eventsLifecycle: batch half + streamed half merge to the one-pass windows") {

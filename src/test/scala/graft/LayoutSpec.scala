@@ -60,25 +60,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("saltedJoin equals the plain join on skewed data") {
-    val s = spark; import s.implicits._
-    // 90% of fact rows hit one key — the classic skew shape
-    val fact = ((1 to 900).map(i => ("hot", i)) ++ (1 to 100).map(i => (s"k${i % 7}", i)))
-      .toDF("k", "v")
-    val dim = Seq(("hot", "H"), ("k0", "A"), ("k1", "B"), ("k2", "C"),
-      ("k3", "D"), ("k4", "E"), ("k5", "F"), ("k6", "G")).toDF("k", "label")
-    val plain = fact.join(dim, "k").select("k", "v", "label")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
-    val salted = Layout.saltedJoin(fact, dim, "k", 8).select("k", "v", "label")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
-    assert(salted === plain)
-    // the salt actually spreads the hot key across sub-keys
-    val saltSpread = fact.filter(col("k") === "hot")
-      .withColumn("salt", pmod(xxhash64(fact.columns.map(col): _*), lit(8L)))
-      .select("salt").distinct().count()
-    assert(saltSpread > 1)
-  }
-
   test("epoch rotation: pinned readers keep their snapshot; rollback is a pointer flip") {
     val base = "graft_epoch_spec"
     val s = spark; import s.implicits._
@@ -229,76 +210,6 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.inParallel((0 until 3).map(unit): _*) === Seq("unit 0", "unit 1", "unit 2"))
   }
 
-  test("compactBuckets: rewrites only overfull buckets; content, pinning, recovery intact") {
-    val s = spark; import s.implicits._
-    val name = "graft_compact_spec"
-    def warehouseDir = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-    def filesByBucket: Map[Int, Set[String]] =
-      warehouseDir.listFiles().toSeq
-        .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        .flatMap(f => Layout.bucketIdOf(f.getName).map(_ -> f.getName))
-        .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2).toSet }
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      Layout.clearStaleTableLocation(spark, name)
-      Layout.pinBucketedReads(spark)
-      // single writer task → exactly one file per bucket to start
-      Layout.writeBucketed(
-        (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v").repartition(1), name, "id", 8)
-      // one day's append: touches only the buckets its two ids hash to
-      Seq((101L, "x"), (102L, "y")).toDF("id", "v").repartition(1)
-        .write.format("parquet").bucketBy(8, "id").sortBy("id")
-        .mode("append").saveAsTable(name)
-      val before = filesByBucket
-      val overfull = before.filter(_._2.size > 1).keySet
-      assert(overfull.nonEmpty && overfull.size < before.size,
-        s"append must leave SOME buckets compact for the O(bucket) assert: $before")
-      val expect = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      Layout.compactBuckets(spark, name, "id")
-      val after = filesByBucket
-      // O(overfull buckets), not O(table): untouched buckets keep their EXACT files
-      before.filterNot(kv => overfull(kv._1)).foreach { case (b, fl) =>
-        assert(after(b) === fl, s"bucket $b was compact and must not be rewritten")
-      }
-      overfull.foreach(b => assert(after(b).size === 1, s"bucket $b must compact to one file"))
-      assert(spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet === expect)
-      // the bucket contract survives the file-level swap: a self-join on the
-      // bucket key plans with NO exchange on either side
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val j = spark.table(name).join(
-          spark.table(name).withColumnRenamed("v", "v2"), "id")
-        val plan = j.queryExecution.executedPlan.toString
-        assert(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
-          s"compacted table must stay co-located:\n$plan")
-        assert(j.count() === 102)
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      }
-      // crash recovery: a staged file left between stage and swap (the crash
-      // window) REPLACES its bucket's live files on the next call
-      val (b, liveNames) = filesByBucket.head
-      val live = liveNames.map(n => new java.io.File(warehouseDir, n))
-      val staging = new java.io.File(warehouseDir, ".compact")
-      staging.mkdirs()
-      val staged = new java.io.File(staging, f"compact-recovery_$b%05d.c000.snappy.parquet")
-      java.nio.file.Files.copy(live.head.toPath, staged.toPath)
-      Layout.compactBuckets(spark, name, "id")
-      val recovered = filesByBucket(b)
-      assert(recovered === Set(staged.getName),
-        s"recovery must install the staged file for bucket $b: $recovered")
-      assert(spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet === expect)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      Layout.clearStaleTableLocation(spark, name)
-    }
-  }
-
   test("runtime bloom filter from a selective build side prunes the probe scan") {
     // The shuffle-join analog of broadcast pruning: when one join side
     // carries a selective filter, Spark's InjectRuntimeFilter builds a
@@ -334,30 +245,5 @@ class LayoutSpec extends SparkSpec {
           col("l_orderkey") === col("o_orderkey")).count()
       assert(j.count() === expect)
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  test("partitioned write: a partition-column predicate prunes directories") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    try {
-      Layout.writePartitioned(
-        Tables.documents(spark, sf).select(col("doc_id"), col("lang"), col("text")),
-        dir, "lang")
-      val filtered = spark.read.parquet(dir).filter(col("lang") === "en")
-      val scan = filtered.queryExecution.executedPlan.collectLeaves()
-        .map(_.toString).mkString("\n")
-      // pruning shows up as a PartitionFilters entry on the scan…
-      assert(scan.contains("PartitionFilters") && scan.contains("lang"))
-      // …and as the scan reading strictly fewer partitions than exist
-      val langs = Tables.documents(spark, sf).select("lang").distinct().count()
-      val readFiles = filtered.select(input_file_name()).distinct()
-        .collect().map(_.getString(0))
-      assert(readFiles.nonEmpty && readFiles.forall(_.contains("lang=en")))
-      assert(langs > 1) // the assertion above is vacuous on a 1-lang corpus
-      // values survive the round trip for the pruned partition
-      val expect = Tables.documents(spark, sf).filter(col("lang") === "en").count()
-      assert(filtered.count() === expect)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 }

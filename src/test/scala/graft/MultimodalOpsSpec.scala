@@ -5,22 +5,6 @@ import graft.operators.MultimodalOps
 
 class MultimodalOpsSpec extends SparkSpec {
 
-  test("decodeImageStub: deterministic dims from payload bytes, typed schema") {
-    val s = spark; import s.implicits._
-    val df = Seq((1L, Array[Byte](0, 0)), (2L, Array[Byte](63, 127)), (3L, Array.empty[Byte]))
-      .toDF("doc_id", "payload")
-    val got = MultimodalOps.decodeImageStub(df).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))).toSeq
-    assert(got === Seq(
-      (1L, 16, 16, 3, 16L * 16 * 3),
-      (2L, 16 + 63, 16 + 63 % 64, 3, 79L * 79 * 3),
-      (3L, 16, 16, 3, 16L * 16 * 3)))
-    // batch shape: rerun gives identical output (stateless partitions)
-    val again = MultimodalOps.decodeImageStub(df).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))).toSeq
-    assert(got === again)
-  }
-
   // --- real-byte image fixtures (the formats a bare JVM can decode) ---
 
   /** 24bpp bottom-up BMP with BITMAPINFOHEADER and 4-byte row padding. */
@@ -51,46 +35,19 @@ class MultimodalOpsSpec extends SparkSpec {
     header ++ data
   }
 
-  test("decodeImage: REAL BMP/PPM/PGM headers decode; other payloads fall back to the stub") {
-    val s = spark; import s.implicits._
+  test("ImageHeader.parse: REAL BMP/PPM/PGM headers decode; other and truncated payloads are unrecognized") {
+    import graft.functions.ImageHeader
     val white = bmp24(5, 3)((_, _) => (255, 255, 255))
     val ppm = netpbm(2, 2, rgb = true)((x, y) => (x * 255, y * 255, 0))
     val pgm = netpbm(4, 1, rgb = false)((x, _) => (x * 60, 0, 0))
-    val text = "hello".getBytes("UTF-8")
-    val truncated = white.take(40) // claims 5x3 but raster missing
-    val df = Seq((1L, white), (2L, ppm), (3L, pgm), (4L, text), (5L, truncated))
-      .toDF("doc_id", "payload")
-    val got = MultimodalOps.decodeImage(df).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3), r.getInt(4))).toSeq
-    assert(got(0) === ((1L, "bmp", 5, 3, 3)))
-    assert(got(1) === ((2L, "ppm", 2, 2, 3)))
-    assert(got(2) === ((3L, "pgm", 4, 1, 1)))
-    // unrecognized bytes take the stub path with the stub's exact dims
-    assert(got(3) === ((4L, "stub", 16 + 'h' % 64, 16 + 'e' % 64, 3)))
-    // a truncated raster is UNRECOGNIZED (stub), never garbage dims
-    assert(got(4)._2 === "stub")
-    // and the declarative stub path agrees with the mapPartitions stub
-    val stubDims = MultimodalOps.decodeImageStub(df.filter($"doc_id" === 4L))
-      .head()
-    assert((got(3)._3, got(3)._4) === ((stubDims.getInt(1), stubDims.getInt(2))))
-  }
-
-  test("ImageHeader expression: codegen and interpreted agree; truncation rejected") {
-    import graft.functions.ImageHeader
-    val payloads = Seq(
-      bmp24(3, 2)((x, y) => (x * 40, y * 90, 128)),
-      netpbm(2, 3, rgb = true)((x, y) => (10 * x, 20 * y, 30)),
-      "not an image".getBytes("UTF-8"))
-    payloads.foreach { p =>
-      val info = ImageHeader.parse(p)
-      val row = ImageHeader.parseToRow(p)
-      if (info == null) assert(row == null)
-      else {
-        assert(row.getString(0) === info.format)
-        assert((row.getInt(1), row.getInt(2), row.getInt(3)) ===
-          ((info.width, info.height, info.channels)))
-      }
-    }
+    def geometry(b: Array[Byte]) = Option(ImageHeader.parse(b))
+      .map(i => (i.format, i.width, i.height, i.channels))
+    assert(geometry(white) === Some(("bmp", 5, 3, 3)))
+    assert(geometry(ppm) === Some(("ppm", 2, 2, 3)))
+    assert(geometry(pgm) === Some(("pgm", 4, 1, 1)))
+    assert(geometry("hello".getBytes("UTF-8")) === None)
+    // a truncated raster is UNRECOGNIZED, never garbage dims
+    assert(geometry(white.take(40)) === None) // claims 5x3 but raster missing
     // every prefix-truncation of a valid file parses as null or consistent —
     // never throws, never returns out-of-payload geometry
     val full = netpbm(3, 3, rgb = true)((_, _) => (1, 2, 3))
@@ -121,9 +78,7 @@ class MultimodalOpsSpec extends SparkSpec {
     // identical images → identical vectors (ANN-ready)
     assert(f(1L) === f(5L))
     // unrecognized payloads take the md5 stub EXACTLY (shared formula)
-    val stub = MultimodalOps.extractFeaturesStub(
-      df.filter($"doc_id" === 4L), dim = 4).head().getSeq[Float](1)
-    assert(f(4L) === stub)
+    assert(f(4L) === MultimodalOps.stubFeature(text, 4).toSeq)
   }
 
   /** Real codec bytes via the JDK's own encoders. */
@@ -140,17 +95,16 @@ class MultimodalOpsSpec extends SparkSpec {
     out.toByteArray
   }
 
-  test("decodeImage: REAL PNG/JPEG/GIF headers decode from actual codec bytes") {
-    val s = spark; import s.implicits._
+  test("ImageHeader.parse: REAL PNG/JPEG/GIF headers decode from actual codec bytes") {
+    import graft.functions.ImageHeader
     val png = encoded("png", 20, 12)((x, _) => (x * 12, x * 12, x * 12))
     val jpg = encoded("jpg", 33, 7)((_, y) => (y * 30, y * 30, y * 30))
     val gif = encoded("gif", 9, 5)((_, _) => (10, 20, 30))
-    val df = Seq((1L, png), (2L, jpg), (3L, gif)).toDF("doc_id", "payload")
-    val got = MultimodalOps.decodeImage(df).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3))).toSeq
-    assert(got(0) === ((1L, "png", 20, 12)))
-    assert(got(1) === ((2L, "jpeg", 33, 7)))
-    assert(got(2) === ((3L, "gif", 9, 5)))
+    def geometry(b: Array[Byte]) = Option(ImageHeader.parse(b))
+      .map(i => (i.format, i.width, i.height))
+    assert(geometry(png) === Some(("png", 20, 12)))
+    assert(geometry(jpg) === Some(("jpeg", 33, 7)))
+    assert(geometry(gif) === Some(("gif", 9, 5)))
   }
 
   test("extractImageFeatures: real PNG pixels decode exactly; JPEG within codec loss") {
@@ -172,9 +126,7 @@ class MultimodalOpsSpec extends SparkSpec {
     f(2L).zip(f(1L)).foreach { case (a, b) =>
       assert(math.abs(a - b) < 0.1f, s"jpeg sample $a vs png $b")
     }
-    val stub = MultimodalOps.extractFeaturesStub(
-      df.filter($"doc_id" === 2L), dim = 16).head().getSeq[Float](1)
-    assert(f(2L) !== stub)
+    assert(f(2L) !== MultimodalOps.stubFeature(jpg, 16).toSeq)
   }
 
   test("extractImageFeatures: GIF pixels decode through ImageIO (palette quantization tolerated)") {
@@ -368,16 +320,6 @@ class MultimodalOpsSpec extends SparkSpec {
     assert(banded === brute)
   }
 
-  test("sampleFrames emits every k-th frame index; zero-frame items emit none") {
-    val s = spark; import s.implicits._
-    val df = Seq((1L, 10), (2L, 1), (3L, 0)).toDF("item", "n_frames")
-    val got = MultimodalOps.sampleFrames(df, "n_frames", 4)
-      .groupBy("item").agg(collect_list("frame_idx").as("f"))
-      .orderBy("item").collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toMap
-    assert(got === Map(1L -> Seq(0, 4, 8), 2L -> Seq(0)))
-    assert(!got.contains(3L)) // corrupt/zero-frame item → no phantom frame 0
-  }
-
   test("multimodalMeta: payload bytes length matches text length for ASCII") {
     val m = MultimodalOps.multimodalMeta(spark, sf)
     assert(m.count() === Tables.documents(spark, sf).count())
@@ -421,23 +363,5 @@ class MultimodalOpsSpec extends SparkSpec {
     assert(out.exists(r => r.getString(2) === "image") &&
       out.exists(r => r.getString(2) === "audio"),
       "both modalities must contribute observable pairs")
-  }
-
-
-  test("extractFeaturesStub: one fixed-dim vector per item, deterministic, ANN-composable") {
-    val payloads = Tables.documents(spark, sf)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-    val f = MultimodalOps.extractFeaturesStub(payloads, dim = 16)
-    assert(f.count() === payloads.count())
-    assert(f.filter(size(col("feature")) =!= 16).count() === 0)
-    // deterministic across runs (same payload → same pseudo-embedding)
-    val a = f.orderBy("item_id").limit(3).collect().map(_.getSeq[Float](1)).toSeq
-    val b = MultimodalOps.extractFeaturesStub(payloads, dim = 16)
-      .orderBy("item_id").limit(3).collect().map(_.getSeq[Float](1)).toSeq
-    assert(a === b)
-    // the output schema composes directly with the similarity operators
-    assert(f.schema("feature").dataType ===
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false))
   }
 }

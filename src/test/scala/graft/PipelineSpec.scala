@@ -120,6 +120,18 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("the landed CSV tables estimate their size from their rows, below the broadcast threshold") {
+    serve { base =>
+      Pipeline.run(spark, base, Some("tok"), limit = 5, retrySleepMillis = 1)
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      Seq("accounts", "clients").foreach { t =>
+        val size = spark.table(t).queryExecution.optimizedPlan.stats.sizeInBytes
+        assert(size > 0 && size < threshold,
+          s"$t estimates $size bytes; broadcast threshold $threshold")
+      }
+    }
+  }
+
   test("every job run submits belongs to an SQL execution; transactions land off a parse, " +
       "not a LocalRelation") {
     serve { base =>

@@ -29,21 +29,27 @@ class RefViewsSpec extends SparkSpec {
   }
 
   test("monthlyTransactionSummary: decimal-exact internal sum, DOUBLE emission") {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    import org.apache.spark.sql.types.DoubleType
     // the cross-engine key emits DOUBLE (comparator can't canonicalize
-    // DECIMAL); the NUMERIC-contract variant keeps the exact decimal(20,2)
+    // DECIMAL), and the column must be the exact terminal cast of the
+    // decimal(18,2) sum — recomputed here in BigDecimal on the driver
     val dbl = RefViews.monthlyTransactionSummary(spark, sf)
-    val dec = RefViews.monthlyTransactionSummaryDecimal(spark, sf)
     assert(dbl.schema("total_amount").dataType === DoubleType)
-    assert(dec.schema("total_amount").dataType === DecimalType(20, 2))
-    // the DOUBLE column must be the exact terminal cast of the decimal sum:
-    // join on the group keys and require bit-identical equality
-    val joined = dec.select(col("month"), col("client_email"),
-        col("total_amount").cast("double").as("expect"))
-      .join(dbl.select(col("month"), col("client_email"),
-        col("total_amount").as("got")), Seq("month", "client_email"))
-    assert(joined.count() === dec.count())
-    assert(joined.filter(col("expect") =!= col("got")).count() === 0)
+    val lines = Tables.customer(spark, sf)
+      .join(Tables.orders(spark, sf), col("c_custkey") === col("o_custkey"))
+      .join(Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+      .select(date_format(col("l_shipdate"), "yyyy-MM-01"), col("c_name"),
+        col("l_extendedprice"))
+      .collect()
+    val expect = lines
+      .groupMapReduce(r => (r.getString(0), r.getString(1)))(r =>
+        BigDecimal.decimal(r.getDouble(2))
+          .setScale(2, BigDecimal.RoundingMode.HALF_UP))(_ + _)
+      .map { case (k, v) => k -> v.toDouble }
+    val got = dbl.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
+    assert(got.nonEmpty)
+    assert(got === expect)
   }
 
   test("highTransactionAccounts: HAVING > 2 enforced, date is month start") {

@@ -64,18 +64,6 @@ class RelOpsSpec extends SparkSpec {
     assert(both === click.intersect(buy))
   }
 
-  test("approxDistinctUsers lands within 3×rsd of the exact distinct count") {
-    val exact = RelOps.distinctUsers(spark, sf)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = RelOps.approxDistinctUsers(spark, sf)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(approx.keySet === exact.keySet)
-    approx.foreach { case (k, est) =>
-      val ex = exact(k).toDouble
-      assert(math.abs(est - ex) / ex <= 0.06, s"$k: est=$est exact=$ex")
-    }
-  }
-
   test("pivot/unpivot round-trip preserves the per-user counts") {
     val wide = RelOps.pivotEventCounts(spark, sf)
     val long = RelOps.unpivotEventCounts(spark, sf)

@@ -71,14 +71,17 @@ class TextOpsSpec extends SparkSpec {
 
   test("langNgram scores trigram profiles, und on no hits") {
     val s = spark; import s.implicits._
-    val docs = Seq(
-      (1L, "the thing and the rest"),    // en trigrams dominate
-      (2L, "zzz qqq xxx"),               // no profile hits → und
-    ).toDF("doc_id", "text")
-    docs.createOrReplaceTempView("ignored")
-    val grams = docs.filter(length(col("text")) >= 3)
-      .select(col("doc_id"), explode(TextOps.charNgrams(lower(col("text")), 3)).as("g"))
-    assert(grams.filter(col("doc_id") === 1 && col("g") === "the").count() === 2L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-langngram").toString
+    try {
+      Seq(
+        (1L, "the thing and the rest"),    // en trigrams dominate
+        (2L, "zzz qqq xxx"),               // no profile hits → und
+      ).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = TextOps.langNgram(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      // en hits: "the" twice, "and" and "ing" once each
+      assert(got === Seq((1L, "en", 4L), (2L, "und", 0L)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("langId predicts a language (or und) for every doc") {
@@ -404,29 +407,6 @@ class TextOpsSpec extends SparkSpec {
     // TakeOrderedAndProject; the only exchange feeds the 1-row stats agg
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
-  }
-
-  test("docQuantilesApprox: sketch estimates bounded by the exact profile") {
-    val exact = TextOps.docQuantiles(spark, sf).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val approx = TextOps.docQuantilesApprox(spark, sf).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(approx.keySet === exact.keySet) // same strata, same n_docs
-    approx.foreach { case (lang, a) =>
-      val e = exact(lang)
-      assert(a.getLong(1) === e.getLong(1), s"$lang n_docs must be exact")
-      val (aMin, aMax) = (a.getLong(2), a.getLong(6))
-      assert(aMin === e.getLong(2) && aMax === e.getLong(6),
-        s"$lang min/max are exact aggregates on both paths")
-      val (p25, p50, p75) = (a.getLong(3), a.getLong(4), a.getLong(5))
-      // estimates are real data values inside the support, monotone…
-      assert(aMin <= p25 && p25 <= p50 && p50 <= p75 && p75 <= aMax, s"$lang")
-      // …and at accuracy 10000 on sf-scale strata the approx median
-      // cannot leave the exact interquartile hull
-      assert(p50 >= e.getDouble(3).floor && p50 <= e.getDouble(5).ceil,
-        s"$lang approx median ${p50} outside exact [p25, p75] " +
-          s"[${e.getDouble(3)}, ${e.getDouble(5)}]")
-    }
   }
 
   test("lmBigramScore: micro-prob bounds, identical docs score identically, plain text beats gibberish") {
